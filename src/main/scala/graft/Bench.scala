@@ -242,6 +242,40 @@ object Bench {
     // timed rep).
     val concurrency =
       math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_CONCURRENCY", "1").toInt)
+    // One query's timed body, shared by both paths: the optional warm
+    // pass (recorded as first_touch), `reps` count passes and
+    // `fullReps` full-width passes. Either rep count may be 0
+    // (count-only or full-only A/B modes): an empty vector reports
+    // 0.0, never an index crash (an r9 run hit IndexOutOfBounds with
+    // FULL_REPS=0), and min/max mirror that. The sequential-only
+    // instruments are left at their "not taken" values (-1 / 0) for
+    // the caller to fill in.
+    def timeQuery(name: String, fn: (SparkSession, String) => DataFrame): R = {
+      val firstTouch: Double =
+        if (warm && !warmSkip(name)) {
+          val t0 = System.nanoTime()
+          try { fn(spark, sfDir).count() } catch { case _: Throwable => }
+          (System.nanoTime() - t0) / 1e9
+        } else -1.0
+      def timed(n: Int, label: String)(consume: DataFrame => Unit): Seq[(Double, Boolean)] =
+        (1 to n).map { _ =>
+          val t0 = System.nanoTime()
+          val ok = try { consume(fn(spark, sfDir)); true }
+                   catch { case e: Throwable =>
+                     System.err.println(s"$label $name: ${e.getClass.getName}: ${e.getMessage}")
+                     false }
+          ((System.nanoTime() - t0) / 1e9, ok)
+        }
+      val runs = timed(reps, "BENCH FAIL")(_.count())
+      val fullRuns = timed(fullReps, "BENCH FULL FAIL")(consumeAll)
+      val sorted = runs.map(_._1).sorted
+      val fullSorted = fullRuns.map(_._1).sorted
+      def med(v: Seq[Double]): Double = if (v.isEmpty) 0.0 else v(v.length / 2)
+      R(name, med(sorted), sorted.headOption.getOrElse(0.0),
+        sorted.lastOption.getOrElse(0.0), med(fullSorted),
+        runs.forall(_._2) && fullRuns.forall(_._2),
+        -1.0, 0, firstTouch, -1.0, -1L)
+    }
     def runConcurrent(): Seq[R] = {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
       implicit val ec: scala.concurrent.ExecutionContext =
@@ -249,35 +283,7 @@ object Bench {
       val futures = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
         scala.concurrent.Future {
           spark.sparkContext.setJobDescription(s"bench: $name")
-          val firstTouch: Double =
-            if (warm && !warmSkip(name)) {
-              val t0 = System.nanoTime()
-              try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-              (System.nanoTime() - t0) / 1e9
-            } else -1.0
-          val runs = (1 to reps).map { _ =>
-            val t0 = System.nanoTime()
-            val ok = try { fn(spark, sfDir).count(); true }
-                     catch { case e: Throwable =>
-                       System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-                       false }
-            ((System.nanoTime() - t0) / 1e9, ok)
-          }
-          val fullRuns = (1 to fullReps).map { _ =>
-            val t0 = System.nanoTime()
-            val ok = try { consumeAll(fn(spark, sfDir)); true }
-                     catch { case e: Throwable =>
-                       System.err.println(s"BENCH FULL FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-                       false }
-            ((System.nanoTime() - t0) / 1e9, ok)
-          }
-          val sorted = runs.map(_._1).sorted
-          val fullSorted = fullRuns.map(_._1).sorted
-          def med(v: Seq[Double]): Double = if (v.isEmpty) 0.0 else v(v.length / 2)
-          R(name, med(sorted), sorted.headOption.getOrElse(0.0),
-            sorted.lastOption.getOrElse(0.0), med(fullSorted),
-            runs.forall(_._2) && fullRuns.forall(_._2),
-            -1.0, 0, firstTouch, -1.0, -1L)
+          timeQuery(name, fn)
         }
       }
       val rs = futures.map(f =>
@@ -288,28 +294,7 @@ object Bench {
     val loopT0 = System.nanoTime()
     val results = if (concurrency > 1) runConcurrent()
     else selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val firstTouch: Double =
-        if (warm && !warmSkip(name)) {
-          val t0 = System.nanoTime()
-          try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-          (System.nanoTime() - t0) / 1e9
-        } else -1.0
-      val runs = (1 to reps).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { fn(spark, sfDir).count(); true }
-                 catch { case e: Throwable =>
-                   System.err.println(s"BENCH FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-                   false }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
-      val fullRuns = (1 to fullReps).map { _ =>
-        val t0 = System.nanoTime()
-        val ok = try { consumeAll(fn(spark, sfDir)); true }
-                 catch { case e: Throwable =>
-                   System.err.println(s"BENCH FULL FAIL $name: ${e.getClass.getName}: ${e.getMessage}")
-                   false }
-        ((System.nanoTime() - t0) / 1e9, ok)
-      }
+      val timing = timeQuery(name, fn)
       // Marginal per-probe cost under a cap (untimed extra run): a cap
       // amortizes any probe-count-INDEPENDENT cost (q45's in-query IVF
       // retrain, artifact opens) over fewer probes, so raw
@@ -342,13 +327,6 @@ object Bench {
             }
           }
         } else (-1.0, -1L)
-      // either rep count may be 0 (count-only or full-only A/B modes);
-      // an empty vector reports 0.0, never an index crash (r9 judge hit
-      // IndexOutOfBounds running FULL_REPS=0), and min/max mirror that
-      val sorted = runs.map(_._1).sorted
-      val fullSorted = fullRuns.map(_._1).sorted
-      def med(v: Seq[Double]): Double =
-        if (v.isEmpty) 0.0 else v(v.length / 2)
       // one calibration sample taken right after this query's reps:
       // the sandbox VM stalls intermittently in multi-minute windows
       // that DRIFT between runs (r9's window hit q39-q53, r10's first
@@ -388,10 +366,8 @@ object Bench {
       // timer interval, keeping the 1-2 s Full-GC pause out of timed
       // reps and out of the calibration samples above
       System.gc()
-      R(name, med(sorted), sorted.headOption.getOrElse(0.0),
-        sorted.lastOption.getOrElse(0.0), med(fullSorted),
-        runs.forall(_._2) && fullRuns.forall(_._2),
-        calibSample, calibExtra, firstTouch, halfCapSec, halfCapProbes)
+      timing.copy(calibMs = calibSample, calibExtra = calibExtra,
+        halfCapSec = halfCapSec, halfCapProbes = halfCapProbes)
     }
     // wall of the whole timing loop: the number the concurrency
     // experiment moves (sum-of-medians can't see tail back-fill)

@@ -17,8 +17,8 @@ import org.apache.spark.sql.execution.ExplainMode
   *    carries the FloatMatCosines kernel; the postings plan joins on
   *    `word`.
   *  - q87 adjacency transfer (Graph.q87RankedPlan's maxBroadcastEdges):
-  *    broadcast-hash endpoint joins up to the edge budget, shuffled
-  *    equi-joins past it. Asserted on the PLAN of the intersect stage
+  *    broadcast-hash endpoint join up to the edge budget, shuffled
+  *    equi-join past it. Asserted on the PLAN of the intersect stage
   *    (the stage itself is not executed here — the gate's edge count
   *    and the checkpointed prefix are).
   *
@@ -62,9 +62,10 @@ object GateAudit {
     // -- gate 2: q87 adjacency broadcast-vs-shuffle -------------------
     val (ranked, cps) = graft.operators.Graph.q87RankedPlan(spark, sfDir)
     val q87Plan = ranked.queryExecution.executedPlan.toString
-    // the two endpoint joins join `oriented` to adjHi on s and d; with
-    // the broadcast gate open they plan as BroadcastHashJoin carrying
-    // the nbrs list, otherwise as shuffled joins on those keys
+    // the endpoint join attaches adj(d) to every edge; with the
+    // broadcast gate open it plans as a BroadcastHashJoin carrying the
+    // nbrs list next to the node-sized readout join's (two in total),
+    // otherwise as a shuffled join on d and only the readout broadcasts
     val nbrsJoins = "BroadcastHashJoin".r.findAllIn(q87Plan).length
     val isBcast = q87Plan.contains("nbrs") && nbrsJoins >= 2
     val bcastOk = isBcast == (bcastExpect == "broadcast")

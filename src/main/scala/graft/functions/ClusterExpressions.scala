@@ -1,51 +1,27 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 object ClusterKernels {
-  /** Nearest centroid by squared euclidean distance; ties go to the
-    * lower cluster id. Returns (cluster, sqDist, sqDist2) where
-    * sqDist2 is the distance to the SECOND-nearest centroid — the
-    * `b` term of the simplified silhouette (distance-to-own vs
-    * nearest-other-centroid), which replaces sklearn's O(N^2)
-    * silhouette_score with an O(N*k) quantity a cluster can compute
-    * (the same substitution Spark ML's ClusteringEvaluator makes).
-    * For k == 1 sqDist2 is NaN (silhouette undefined). */
-  def nearest(v: ArrayData, centroids: Array[Array[Double]]): InternalRow = {
-    val dim = v.numElements()
-    var best = -1
-    var bestD = Double.MaxValue
-    var secondD = Double.MaxValue
-    var c = 0
-    while (c < centroids.length) {
-      val cent = centroids(c)
-      var d = 0.0
-      var i = 0
-      while (i < dim) {
-        val diff = v.getFloat(i).toDouble - cent(i)
-        d += diff * diff
-        i += 1
-      }
-      if (d < bestD) { secondD = bestD; bestD = d; best = c }
-      else if (d < secondD) { secondD = d }
-      c += 1
-    }
-    if (centroids.length < 2) secondD = Double.NaN
-    new GenericInternalRow(Array[Any](best, bestD, secondD))
-  }
-
-  /** Integer twin of `nearest` for QUANTIZED vectors (array<long>):
-    * every distance is exact 64-bit integer arithmetic, so the argmin
-    * is bit-reproducible across engines and partition orders — the
-    * property that lets a whole Lloyd's iteration be oracle-checked
-    * (doubles lose exactness past 2^53; quantized coords ~2^24 keep
-    * per-row distances under ~2^56). Ties go to the lower cluster id;
-    * for k == 1, sqDist2 = Long.MaxValue (no second centroid). */
+  /** Nearest centroid of a QUANTIZED vector (array<long>) by squared
+    * euclidean distance. Every distance is exact 64-bit integer
+    * arithmetic, so the argmin is bit-reproducible across engines and
+    * partition orders — the property that lets a whole Lloyd's
+    * iteration be oracle-checked (doubles lose exactness past 2^53;
+    * quantized coords ~2^24 keep per-row distances under ~2^56).
+    * Returns (cluster, sqDist, sqDist2) where sqDist2 is the distance
+    * to the SECOND-nearest centroid — the `b` term of the simplified
+    * silhouette (distance-to-own vs nearest-other-centroid), which
+    * replaces sklearn's O(N^2) silhouette_score with an O(N*k)
+    * quantity a cluster can compute (the same substitution Spark ML's
+    * ClusteringEvaluator makes). Ties go to the lower cluster id; for
+    * k == 1, sqDist2 = Long.MaxValue (no second centroid). */
   def nearestInt(v: ArrayData, centroids: Array[Array[Long]]): InternalRow = {
     val dim = v.numElements()
     var best = -1
@@ -68,9 +44,11 @@ object ClusterKernels {
     new GenericInternalRow(Array[Any](best, bestD, secondD))
   }
 
-  /** Integer twin of `nearestCells` for QUANTIZED vectors: exact
-    * int64 distances make the cell ranking engine-reproducible (the
-    * IVF oracle's ORDER BY d, cluster), like nearestInt for nearest. */
+  /** The `p` nearest centroid ids of a QUANTIZED vector, ascending by
+    * exact int64 squared distance (ties → lower id) — the multi-probe
+    * cell list of an IVF index, engine-reproducible (the IVF oracle's
+    * ORDER BY d, cluster). Selection sort over k entries: k is
+    * tens-to-thousands, so O(k*p) per row beats building a heap. */
   def nearestCellsInt(v: ArrayData, centroids: Array[Array[Long]], p: Int): ArrayData = {
     val dim = v.numElements()
     val k = centroids.length
@@ -95,46 +73,6 @@ object ClusterKernels {
     while (j < n) {
       var best = -1
       var bestD = Long.MaxValue
-      var c2 = 0
-      while (c2 < k) {
-        if (!taken(c2) && dists(c2) < bestD) { bestD = dists(c2); best = c2 }
-        c2 += 1
-      }
-      taken(best) = true
-      out(j) = best
-      j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** The `p` nearest centroid ids, ascending by squared euclidean
-    * distance (ties → lower id) — the multi-probe cell list of an IVF
-    * index. Selection sort over k entries: k is tens-to-thousands, so
-    * O(k*p) per row beats building a heap. */
-  def nearestCells(v: ArrayData, centroids: Array[Array[Double]], p: Int): ArrayData = {
-    val dim = v.numElements()
-    val k = centroids.length
-    val dists = new Array[Double](k)
-    var c = 0
-    while (c < k) {
-      val cent = centroids(c)
-      var d = 0.0
-      var i = 0
-      while (i < dim) {
-        val diff = v.getFloat(i).toDouble - cent(i)
-        d += diff * diff
-        i += 1
-      }
-      dists(c) = d
-      c += 1
-    }
-    val n = math.min(p, k)
-    val out = new Array[Int](n)
-    val taken = new Array[Boolean](k)
-    var j = 0
-    while (j < n) {
-      var best = -1
-      var bestD = Double.MaxValue
       var c2 = 0
       while (c2 < k) {
         if (!taken(c2) && dists(c2) < bestD) { bestD = dists(c2); best = c2 }
@@ -179,152 +117,6 @@ object ClusterKernels {
       s += 1
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
-  }
-
-  /** Intersection of two SORTED long arrays by primitive two-pointer
-    * merge — allocation-light versus the generic hash-set
-    * array_intersect; the per-edge unit of triangle counting.
-    * Duplicate-free inputs assumed (both sides are adjacency sets). */
-  def sortedLongIntersect(a: ArrayData, b: ArrayData): ArrayData = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    val buf = new Array[Long](math.min(na, nb))
-    var i = 0; var j = 0; var k = 0
-    while (i < na && j < nb) {
-      val x = a.getLong(i); val y = b.getLong(j)
-      if (x == y) { buf(k) = x; k += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(buf, k))
-  }
-
-  /** Int variant of sortedLongIntersect, for the narrow-id adjacency
-    * encoding (q87): when every node id fits in 32 bits the adjacency
-    * arrays — the dominant shuffle/broadcast volume of the triangle
-    * join, sum-of-squared-higher-degrees entries in total — carry half
-    * the bytes, and the merge compares ints. */
-  def sortedIntIntersect(a: ArrayData, b: ArrayData): ArrayData = {
-    val na = a.numElements()
-    val nb = b.numElements()
-    val buf = new Array[Int](math.min(na, nb))
-    var i = 0; var j = 0; var k = 0
-    while (i < na && j < nb) {
-      val x = a.getInt(i); val y = b.getInt(j)
-      if (x == y) { buf(k) = x; k += 1; i += 1; j += 1 }
-      else if (x < y) i += 1
-      else j += 1
-    }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(buf, k))
-  }
-
-  /** Delta-varint packing of a SORTED id array (q87's shuffle-form
-    * adjacency transfer, r14; guide §2.3 "shuffle fewer bytes"): the
-    * encoding is [count varint][zigzag-varint first value][plain
-    * varint deltas...]. Sorted, duplicate-free inputs make every delta
-    * a positive integer, and adjacency gaps are tiny compared to the
-    * id-space width — measured 1.68 B/entry on the sf1 co-purchase
-    * graph versus the 4 B (int) / 8 B (long) array elements, BEFORE
-    * shuffle compression. The arrays being packed are the triangle
-    * join's dominant shuffle volume (sum of squared higher-degrees
-    * entries, the E^1.5 term), so the byte width of one entry is the
-    * shuffle bill's constant factor. Decode never materializes the
-    * array: the packed intersect below merges the two byte streams
-    * directly. */
-  private def writeVarint(buf: Array[Byte], pos0: Int, v0: Long): Int = {
-    var pos = pos0; var v = v0
-    while ((v & ~0x7FL) != 0L) {
-      buf(pos) = ((v & 0x7FL) | 0x80L).toByte; pos += 1; v >>>= 7
-    }
-    buf(pos) = v.toByte
-    pos + 1
-  }
-
-  private def packSorted(n: Int, elem: Int => Long): Array[Byte] = {
-    // worst case: 10 bytes per varint (64-bit), n deltas + first + count
-    val buf = new Array[Byte](10 * (n + 2))
-    var pos = writeVarint(buf, 0, n.toLong)
-    var prev = 0L
-    var i = 0
-    while (i < n) {
-      val x = elem(i)
-      // zigzag the first value (ids may be negative); deltas of a
-      // sorted array are >= 0 and encode as plain varints
-      val v = if (i == 0) (x << 1) ^ (x >> 63) else x - prev
-      pos = writeVarint(buf, pos, v)
-      prev = x
-      i += 1
-    }
-    java.util.Arrays.copyOf(buf, pos)
-  }
-
-  def packSortedInts(a: ArrayData): Array[Byte] =
-    packSorted(a.numElements(), i => a.getInt(i).toLong)
-
-  def packSortedLongs(a: ArrayData): Array[Byte] =
-    packSorted(a.numElements(), i => a.getLong(i))
-
-  /** Intersection of two delta-varint-packed sorted id streams —
-    * the packed twin of sortedIntIntersect/sortedLongIntersect: a
-    * two-pointer merge that decodes each stream on the fly (no
-    * intermediate array), emitting the common ids. Output ids are
-    * exact (the encoding is lossless), so the triangle credits are
-    * bit-identical to the unpacked branches. */
-  private def packedIntersect(a: Array[Byte], b: Array[Byte])
-      : (Array[Long], Int) = {
-    def readRaw(buf: Array[Byte], pos0: Int): Long = {
-      // varint value; caller tracks position via the return of skip
-      var pos = pos0; var v = 0L; var shift = 0
-      var x = buf(pos)
-      while ((x & 0x80) != 0) {
-        v |= (x & 0x7FL) << shift; shift += 7; pos += 1; x = buf(pos)
-      }
-      v | ((x & 0x7FL) << shift)
-    }
-    def skip(buf: Array[Byte], pos0: Int): Int = {
-      var pos = pos0
-      while ((buf(pos) & 0x80) != 0) pos += 1
-      pos + 1
-    }
-    val na = readRaw(a, 0).toInt; var pa = skip(a, 0)
-    val nb = readRaw(b, 0).toInt; var pb = skip(b, 0)
-    val out = new Array[Long](math.min(na, nb))
-    var k = 0
-    var ra = 0; var rb = 0 // elements consumed
-    var xa = 0L; var xb = 0L
-    var needA = true; var needB = true
-    while ((ra < na || !needA) && (rb < nb || !needB)) {
-      if (needA) {
-        val v = readRaw(a, pa); pa = skip(a, pa)
-        xa = if (ra == 0) (v >>> 1) ^ -(v & 1L) else xa + v
-        ra += 1; needA = false
-      }
-      if (needB) {
-        val v = readRaw(b, pb); pb = skip(b, pb)
-        xb = if (rb == 0) (v >>> 1) ^ -(v & 1L) else xb + v
-        rb += 1; needB = false
-      }
-      if (xa == xb) { out(k) = xa; k += 1; needA = true; needB = true }
-      else if (xa < xb) needA = true
-      else needB = true
-    }
-    (out, k)
-  }
-
-  def packedIntIntersect(a: Array[Byte], b: Array[Byte]): ArrayData = {
-    val (out, k) = packedIntersect(a, b)
-    val ints = new Array[Int](k)
-    var i = 0
-    while (i < k) { ints(i) = out(i).toInt; i += 1 }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(ints)
-  }
-
-  def packedLongIntersect(a: Array[Byte], b: Array[Byte]): ArrayData = {
-    val (out, k) = packedIntersect(a, b)
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      java.util.Arrays.copyOf(out, k))
   }
 
   /** Nearest SUB-centroid index within one super-cell's codebook — the
@@ -408,27 +200,91 @@ object ClusterKernels {
     }
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
-}
 
-/** Assign a float vector to its nearest centroid — the per-row half of
-  * a Lloyd's iteration. The centroid matrix rides along as a
-  * broadcast-style reference object in both eval and generated code. */
-case class NearestCentroid(child: Expression, centroids: Array[Array[Double]])
-    extends UnaryExpression {
-  override def dataType: DataType = StructType(Seq(
-    StructField("cluster", IntegerType, nullable = false),
-    StructField("sq_dist", DoubleType, nullable = false),
-    StructField("sq_dist2", DoubleType, nullable = false)))
-  override def nullSafeEval(input: Any): Any =
-    ClusterKernels.nearest(input.asInstanceOf[ArrayData], centroids)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ClusterKernels.nearest($c, $ref);")
+  /** Delta-varint packing of a SORTED, duplicate-free id array — q87's
+    * adjacency encoding: [zigzag-varint first value][plain varint
+    * deltas...], ending with the byte array. Sorted input makes every
+    * delta a positive integer, and adjacency gaps are tiny compared to
+    * the id-space width — measured 1.68 B/entry on the sf1 co-purchase
+    * graph versus the 4 B (int) / 8 B (long) array element. The
+    * encoding does not depend on the id width: int and long elements
+    * (`longElems`) pack to the same bytes for the same values, so one
+    * kernel serves every id range, including ids past 2^32. */
+  def packSorted(a: ArrayData, longElems: Boolean): Array[Byte] = {
+    val n = a.numElements()
+    val buf = new Array[Byte](10 * n) // worst case: 10 bytes per 64-bit varint
+    var pos = 0
+    var prev = 0L
+    var i = 0
+    while (i < n) {
+      val x = if (longElems) a.getLong(i) else a.getInt(i).toLong
+      // zigzag the first value (ids may be negative); deltas of a
+      // sorted array are >= 0 and encode as plain varints
+      var v = if (i == 0) (x << 1) ^ (x >> 63) else x - prev
+      while ((v & ~0x7FL) != 0L) {
+        buf(pos) = ((v & 0x7FL) | 0x80L).toByte; pos += 1; v >>>= 7
+      }
+      buf(pos) = v.toByte; pos += 1
+      prev = x
+      i += 1
+    }
+    java.util.Arrays.copyOf(buf, pos)
   }
-  override protected def withNewChildInternal(newChild: Expression): NearestCentroid =
-    copy(child = newChild)
-  override def prettyName: String = "nearest_centroid"
+
+  /** Sequential varint reader over one packed stream. */
+  private final class VarintReader(buf: Array[Byte]) {
+    private var pos = 0
+    def hasNext: Boolean = pos < buf.length
+    def next(): Long = {
+      var x = buf(pos); pos += 1
+      if (x >= 0) x.toLong // one-byte value, the common case
+      else {
+        var v = x & 0x7FL; var shift = 7
+        x = buf(pos); pos += 1
+        while (x < 0) {
+          v |= (x & 0x7FL) << shift; shift += 7
+          x = buf(pos); pos += 1
+        }
+        v | (x.toLong << shift)
+      }
+    }
+  }
+
+  /** Intersection of two packSorted streams — q87's per-edge closing
+    * check adj(s) ∩ adj(d): a two-pointer merge that decodes each
+    * stream on the fly (no intermediate id arrays), emitting the
+    * common ids as an array<bigint>. The encoding is lossless, so the
+    * ids — and the triangle credits built from them — are exact. */
+  def packedIntersect(a: Array[Byte], b: Array[Byte]): ArrayData = {
+    // allocated at the first common id (most edges close none); every
+    // id takes at least one byte, so the shorter stream's length
+    // bounds the intersection
+    var out: Array[Long] = null
+    var k = 0
+    val ra = new VarintReader(a); val rb = new VarintReader(b)
+    if (ra.hasNext && rb.hasNext) {
+      def unzigzag(v: Long): Long = (v >>> 1) ^ -(v & 1L)
+      var xa = unzigzag(ra.next())
+      var xb = unzigzag(rb.next())
+      var more = true
+      while (more) {
+        if (xa < xb) {
+          more = ra.hasNext
+          if (more) xa += ra.next()
+        } else if (xa > xb) {
+          more = rb.hasNext
+          if (more) xb += rb.next()
+        } else {
+          if (out == null) out = new Array[Long](math.min(a.length, b.length))
+          out(k) = xa; k += 1
+          more = ra.hasNext && rb.hasNext
+          if (more) { xa += ra.next(); xb += rb.next() }
+        }
+      }
+    }
+    UnsafeArrayData.fromPrimitiveArray(
+      if (out == null) Array.emptyLongArray else out, Platform.LONG_ARRAY_OFFSET, k, 8)
+  }
 }
 
 /** Assign a QUANTIZED (array<long>) vector to its nearest centroid
@@ -503,105 +359,9 @@ case class PqDistTableInt(child: Expression, codebooks: Array[Array[Array[Long]]
   override def prettyName: String = "pq_dist_table_int"
 }
 
-/** Intersection of two sorted long arrays (primitive merge). */
-case class SortedLongIntersect(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ClusterKernels.sortedLongIntersect(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ClusterKernels.sortedLongIntersect($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedLongIntersect =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "sorted_long_intersect"
-}
-
-/** Intersection of two sorted int arrays — the narrow-id twin of
-  * SortedLongIntersect (half the bytes per adjacency entry; see
-  * ClusterKernels.sortedIntIntersect). */
-case class SortedIntIntersect(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ClusterKernels.sortedIntIntersect(
-      a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ClusterKernels.sortedIntIntersect($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): SortedIntIntersect =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "sorted_int_intersect"
-}
-
-/** Delta-varint pack a sorted int array into a binary column — the
-  * shuffle-form adjacency encoding (see ClusterKernels.packSortedInts:
-  * measured 1.68 B/entry vs the 4 B array element on the sf1 co-purchase graph). */
-case class PackSortedInts(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any =
-    ClusterKernels.packSortedInts(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ClusterKernels.packSortedInts($c);")
-  override protected def withNewChildInternal(newChild: Expression): PackSortedInts =
-    copy(child = newChild)
-  override def prettyName: String = "pack_sorted_ints"
-}
-
-/** Long twin of PackSortedInts (wide-id graphs). */
-case class PackSortedLongs(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = BinaryType
-  override def nullSafeEval(input: Any): Any =
-    ClusterKernels.packSortedLongs(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ClusterKernels.packSortedLongs($c);")
-  override protected def withNewChildInternal(newChild: Expression): PackSortedLongs =
-    copy(child = newChild)
-  override def prettyName: String = "pack_sorted_longs"
-}
-
-/** Intersection of two delta-varint-packed sorted int streams —
-  * decodes on the fly (no intermediate arrays); output ids are exact,
-  * so triangle credits are bit-identical to the unpacked branch. */
-case class PackedIntIntersect(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ClusterKernels.packedIntIntersect(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ClusterKernels.packedIntIntersect($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PackedIntIntersect =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "packed_int_intersect"
-}
-
-/** Long twin of PackedIntIntersect. */
-case class PackedLongIntersect(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ClusterKernels.packedLongIntersect(
-      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) =>
-      s"${ev.value} = graft.functions.ClusterKernels.packedLongIntersect($a, $b);")
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): PackedLongIntersect =
-    copy(left = newLeft, right = newRight)
-  override def prettyName: String = "packed_long_intersect"
-}
-
 /** Exact int64 squared distance between two quantized vectors. */
 case class IntVecSqDist(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression {
   override def dataType: DataType = LongType
   override def nullSafeEval(a: Any, b: Any): Any =
     ClusterKernels.intSqDist(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
@@ -614,30 +374,13 @@ case class IntVecSqDist(left: Expression, right: Expression)
   override def prettyName: String = "int_vec_sq_dist"
 }
 
-/** The p nearest centroid ids for a float vector — IVF cell probes. */
-case class NearestCells(child: Expression, centroids: Array[Array[Double]], p: Int)
-    extends UnaryExpression {
-  require(p >= 1, "need at least one probe cell")
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def nullSafeEval(input: Any): Any =
-    ClusterKernels.nearestCells(input.asInstanceOf[ArrayData], centroids, p)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ref = ctx.addReferenceObj("centroids", centroids, "double[][]")
-    nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ClusterKernels.nearestCells($c, $ref, $p);")
-  }
-  override protected def withNewChildInternal(newChild: Expression): NearestCells =
-    copy(child = newChild)
-  override def prettyName: String = "nearest_cells"
-}
-
 /** Nearest sub-centroid index within the row's super-cell (two-level
   * coarse quantizer assignment) — see ClusterKernels.nearestSubInt.
   * The per-super codebooks ride along as one broadcast-style reference
   * object; the row only scores its own super-cell's entries. */
 case class NearestSubCentroidInt(left: Expression, right: Expression,
     subCents: Array[Array[Array[Long]]])
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
+    extends BinaryExpression {
   override def dataType: DataType = IntegerType
   override def nullSafeEval(v: Any, superId: Any): Any =
     ClusterKernels.nearestSubInt(
@@ -651,4 +394,40 @@ case class NearestSubCentroidInt(left: Expression, right: Expression,
       newLeft: Expression, newRight: Expression): NearestSubCentroidInt =
     copy(left = newLeft, right = newRight)
   override def prettyName: String = "nearest_sub_centroid_int"
+}
+
+/** Delta-varint pack a sorted id array (array<int> or array<bigint>)
+  * into a binary column — q87's adjacency encoding; see
+  * ClusterKernels.packSorted. */
+case class PackSorted(child: Expression) extends UnaryExpression {
+  private def longElems: Boolean = child.dataType match {
+    case ArrayType(LongType, _) => true
+    case _ => false
+  }
+  override def dataType: DataType = BinaryType
+  override def nullSafeEval(input: Any): Any =
+    ClusterKernels.packSorted(input.asInstanceOf[ArrayData], longElems)
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.functions.ClusterKernels.packSorted($c, $longElems);")
+  override protected def withNewChildInternal(newChild: Expression): PackSorted =
+    copy(child = newChild)
+  override def prettyName: String = "pack_sorted"
+}
+
+/** Intersection of two PackSorted streams as array<bigint> — decodes
+  * on the fly; see ClusterKernels.packedIntersect. */
+case class PackedIntersect(left: Expression, right: Expression)
+    extends BinaryExpression {
+  override def dataType: DataType = ArrayType(LongType, containsNull = false)
+  override def nullSafeEval(a: Any, b: Any): Any =
+    ClusterKernels.packedIntersect(
+      a.asInstanceOf[Array[Byte]], b.asInstanceOf[Array[Byte]])
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.functions.ClusterKernels.packedIntersect($a, $b);")
+  override protected def withNewChildrenInternal(
+      newLeft: Expression, newRight: Expression): PackedIntersect =
+    copy(left = newLeft, right = newRight)
+  override def prettyName: String = "packed_intersect"
 }

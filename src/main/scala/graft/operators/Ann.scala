@@ -331,7 +331,9 @@ object Ann {
     * standard contract of embedding dedup at scale (candidate
     * recall traded for pruning, cf. SNIPPETS.md MinHashLSH).
     *
-    * Parameter regime — MEASURED (CandAudit main, r7), not assumed:
+    * Parameter regime — MEASURED in round 7, not assumed (recorded in
+    * OPTIMIZATION_r13.md's q30 entry; the one-off audit main that took
+    * these numbers is in git history, commit f128992):
     * the test embeddings hold NO high-cosine planted pairs (max
     * pairwise cosine ~0.51; the 0.3 threshold sits just above the
     * random-pair background of |cos|~0.12 for 64-d). Near the

@@ -3,103 +3,37 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.Bridge.{column => exprCol, expression}
-import graft.functions.NearestCentroid
+import graft.functions.{NearestCentroidInt, NearestSubCentroidInt}
 import graft.sources.Tables
 
 /** KMeans clustering over the embedding column — the reference runs
   * sklearn KMeans on its taxonomy feature matrix (tasks.py:472-478),
-  * single-node. Here: Lloyd's iterations as DataFrame jobs — the
-  * assignment step is a codegen'd NearestCentroid expression over one
-  * corpus scan; the update step reduces per-dimension sums to the
-  * driver (k*dim doubles — metadata-sized, the same reduction shape
-  * MLlib uses). Deterministic: first-k init, lower-id tie-breaks,
-  * fixed iteration count.
+  * single-node. Here: DETERMINISTIC quantized Lloyd's iterations as
+  * DataFrame jobs — the assignment step is a codegen'd
+  * NearestCentroidInt expression over one corpus scan; the update step
+  * reduces per-dimension integer sums to the driver (k*dim longs —
+  * metadata-sized, the same reduction shape MLlib uses). First-k init,
+  * lower-id tie-breaks, fixed iteration count.
   */
 object Clustering {
 
-  /** One Lloyd's assignment pass against the given centroids. Carries
-    * sq_dist2 (second-nearest centroid) for the silhouette term. */
-  def assign(vecs: DataFrame, centroids: Array[Array[Double]]): DataFrame =
-    vecs.withColumn("asg",
-      exprCol(NearestCentroid(expression(col("embedding")), centroids)))
-      .select(col("vec_id"), col("embedding"),
-        col("asg.cluster").as("cluster"), col("asg.sq_dist").as("sq_dist"),
-        col("asg.sq_dist2").as("sq_dist2"))
-
-  /** Full KMeans: returns the final assignment frame. The vector frame
-    * is persisted across the `iters` jobs (each iteration is its own
-    * action; without the cache every round rescans + re-repartitions
-    * the source) and unpersisted once the final assignment is
-    * materialized. */
-  def kmeans(spark: SparkSession, dir: String, k: Int, iters: Int): DataFrame = {
-    val vecs = Tables.parallelized(Tables.embeddings(spark, dir), col("vec_id"))
-      .select(col("vec_id"), col("embedding"))
-      .persist()
-    val cents = centroidsOf(vecs, k, iters)
-    // materialize the final assignment, then release the iteration cache
-    val result = assign(vecs, cents).localCheckpoint()
-    vecs.unpersist(blocking = false)
-    result
-  }
-
-  /** Just the trained centroid matrix (k*dim doubles — broadcast-sized
-    * by construction); the "model" an IVF index probes against.
-    * This float path is the GENERAL-RANGE fallback next to
-    * centroidsQuantized: quantization at 2^24 keeps int64 distances
-    * exact only while coordinates stay small (|x| up to ~2^5 for
-    * 64 dims); data outside that envelope trains here instead —
-    * deterministic but not cross-engine bit-reproducible
-    * (ClusteringSpec covers both paths). */
-  def centroids(spark: SparkSession, dir: String, k: Int, iters: Int): Array[Array[Double]] = {
-    val vecs = Tables.parallelized(Tables.embeddings(spark, dir), col("vec_id"))
-      .select(col("vec_id"), col("embedding"))
-      .persist()
-    val cents = centroidsOf(vecs, k, iters)
-    vecs.unpersist(blocking = false)
-    cents
-  }
-
-  /** Lloyd's iterations over a persisted (vec_id, embedding) frame. */
-  private def centroidsOf(vecs: DataFrame, k: Int, iters: Int): Array[Array[Double]] = {
-    // deterministic init: the k lowest vec_ids
-    var centroids: Array[Array[Double]] = vecs
-      .orderBy(col("vec_id")).limit(k).collect()
-      .map(_.getAs[scala.collection.Seq[Float]]("embedding").map(_.toDouble).toArray)
-    var it = 0
-    while (it < iters) {
-      val assigned = assign(vecs, centroids)
-      // update step: per-(cluster, dim) mean via one shuffle, k*dim
-      // rows back to the driver
-      val sums = assigned
-        .select(col("cluster"), posexplode(col("embedding")).as(Seq("pos", "x")))
-        .groupBy(col("cluster"), col("pos"))
-        .agg(sum(col("x").cast("double")).as("s"), count(lit(1)).as("n"))
-        .collect()
-      val next = centroids.map(_.clone())
-      sums.foreach { r =>
-        next(r.getAs[Int]("cluster"))(r.getAs[Int]("pos")) =
-          r.getAs[Double]("s") / r.getAs[Long]("n")
-      }
-      centroids = next
-      it += 1
-    }
-    centroids
-  }
-
-  /** Cluster summary — sizes, mean within-cluster distance, and mean
+  /** Cluster summary — sizes, rms within-cluster distance, and mean
     * simplified silhouette (b - a)/max(a, b) with a = distance to own
     * centroid, b = distance to nearest OTHER centroid — the
     * distributed stand-in for the reference's silhouette_score
-    * (tasks.py:477-478); exact silhouette is O(N^2) and driver-bound. */
+    * (tasks.py:477-478); exact silhouette is O(N^2) and driver-bound.
+    * Runs on the quantized assignment: its sq_dist / sq_dist2 carry
+    * a^2 and b^2 in quantized units, the silhouette ratio does not
+    * depend on that scale, and rms_dist divides it back out. */
   def kmeansSilhouette(spark: SparkSession, dir: String): DataFrame = {
     val a = sqrt(col("sq_dist"))
     val b = sqrt(col("sq_dist2"))
-    kmeans(spark, dir, k = 10, iters = 5)
+    kmeansQuantized(spark, dir, k = 10, iters = 5)
       .withColumn("sil", (b - a) / greatest(a, b))
       .groupBy(col("cluster"))
       .agg(
         count(lit(1)).as("n"),
-        sqrt(avg(col("sq_dist"))).as("rms_dist"),
+        (sqrt(avg(col("sq_dist"))) / QuantScale).as("rms_dist"),
         avg(col("sil")).as("silhouette"))
   }
 
@@ -107,7 +41,9 @@ object Clustering {
     * x * 2^24 is EXACT in double for the unit-range embeddings and
     * floor() of it is engine-identical; coordinates land under ~2^25,
     * keeping every per-row squared distance under ~2^56 (exact in
-    * int64 for both engines). */
+    * int64 for both engines). The int64 envelope holds while
+    * coordinates stay within |x| ~2^5 at 64 dims; the embedding corpus
+    * is unit-range. */
   val QuantScale = 16777216.0
 
   /** Embedding column quantized to integers: floor(x * 2^24). */
@@ -137,11 +73,10 @@ object Clustering {
     * quantize, reduce in integers, derive float metrics only from the
     * exact aggregates. */
   def kmeansQuantized(spark: SparkSession, dir: String, k: Int, iters: Int): DataFrame = {
-    import org.apache.spark.sql.graftbridge.Bridge.{column => exprColQ, expression => exprQ}
     val vecs = quantizedVecs(spark, dir).persist()
     val cents = centroidsQuantizedOf(vecs, k, iters)
     val result = vecs.withColumn("asg",
-        exprColQ(graft.functions.NearestCentroidInt(exprQ(col("q")), cents)))
+        exprCol(NearestCentroidInt(expression(col("q")), cents)))
       .select(col("vec_id"), col("q"),
         col("asg.cluster").as("cluster"),
         col("asg.sq_dist").as("sq_dist"), col("asg.sq_dist2").as("sq_dist2"))
@@ -183,14 +118,13 @@ object Clustering {
 
   private def centroidsQuantizedOf(vecs: DataFrame, k: Int,
       iters: Int): Array[Array[Long]] = {
-    import org.apache.spark.sql.graftbridge.Bridge.{column => exprColQ, expression => exprQ}
     var cents: Array[Array[Long]] = vecs
       .orderBy(col("vec_id")).limit(k).collect()
       .map(_.getAs[scala.collection.Seq[Long]]("q").toArray)
     var it = 0
     while (it < iters) {
       val sums = vecs.withColumn("asg",
-          exprColQ(graft.functions.NearestCentroidInt(exprQ(col("q")), cents)))
+          exprCol(NearestCentroidInt(expression(col("q")), cents)))
         .select(col("asg.cluster").as("cluster"), posexplode(col("q")).as(Seq("pos", "x")))
         .groupBy(col("cluster"), col("pos"))
         .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
@@ -278,14 +212,13 @@ object Clustering {
   def twoLevelQuantizer(spark: SparkSession, dir: String, n: Long,
       target: Int = 250, iters: Int = 5,
       maxDriverUpdateRows: Long = MaxDriverUpdateRows): TwoLevelQuantizer = {
-    import org.apache.spark.sql.graftbridge.Bridge.{column => exprColQ, expression => exprQ}
     val k1 = ceilSqrt(math.max(16L, n / target))
     val tgt = twoLevelTarget(n, target)
     val vecs = quantizedVecs(spark, dir).persist()
     val superCents = centroidsQuantizedOf(vecs, k1, iters)
     // FINAL level-1 assignment (training's last argmin is one behind)
     val vs = vecs.withColumn("asg",
-        exprColQ(graft.functions.NearestCentroidInt(exprQ(col("q")), superCents)))
+        exprCol(NearestCentroidInt(expression(col("q")), superCents)))
       .select(col("vec_id"), col("q"), col("asg.cluster").as("super"))
       .persist()
     val counts = new Array[Long](k1)
@@ -322,8 +255,8 @@ object Clustering {
     var it = 0
     while (it < iters) {
       val sums = vs.withColumn("sub",
-          exprColQ(graft.functions.NearestSubCentroidInt(
-            exprQ(col("q")), exprQ(col("super")), subCents)))
+          exprCol(NearestSubCentroidInt(
+            expression(col("q")), expression(col("super")), subCents)))
         .select(col("super"), col("sub"), posexplode(col("q")).as(Seq("pos", "x")))
         .groupBy(col("super"), col("sub"), col("pos"))
         .agg(sum(col("x")).as("s"), count(lit(1)).as("n"))
@@ -346,12 +279,11 @@ object Clustering {
     * super argmin is re-evaluated for the offset lookup — k1*dim
     * integer ops, noise next to the scan. */
   def twoLevelCellCol(q: Column, model: TwoLevelQuantizer): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge.{column => exprColQ, expression => exprQ}
-    val superId = exprColQ(graft.functions.NearestCentroidInt(
-      exprQ(q), model.superCents)).getField("cluster")
+    val superId = exprCol(NearestCentroidInt(
+      expression(q), model.superCents)).getField("cluster")
     element_at(typedLit(model.offsets.toSeq), superId + 1) +
-      exprColQ(graft.functions.NearestSubCentroidInt(
-        exprQ(q), exprQ(superId), model.subCents)).cast("long")
+      exprCol(NearestSubCentroidInt(
+        expression(q), expression(superId), model.subCents)).cast("long")
   }
 
   /** q32 gate query: deterministic quantized kmeans, k=10, 5

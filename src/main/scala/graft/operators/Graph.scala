@@ -346,7 +346,8 @@ object Graph {
     * global rank window — bounding every "higher neighbors" list by
     * ~sqrt(E) (compact-forward). Those lists aggregate to NODE-sized
     * adjacency rows; each oriented edge (s, d) then intersects
-    * adj(s) ∩ adj(d) in one codegen'd sorted-array pass, which names
+    * adj(s) ∩ adj(d) in one codegen'd merge of the two packed lists,
+    * which names
     * every triangle exactly once (at its minimum-(deg, id) vertex:
     * the closing vertex w sits in both higher-lists). Shuffle volume
     * is the edge table + the adjacency table — wedge ROWS never
@@ -378,7 +379,7 @@ object Graph {
   def q87Triangles(spark: SparkSession, dir: String): DataFrame = {
     val (ranked, checkpoints) = q87RankedPlan(spark, dir)
     // materialize the bounded (20-row) result on the driver, then
-    // release the four localCheckpoint block sets — they'd otherwise
+    // release the three localCheckpoint block sets — they'd otherwise
     // linger in the block manager until GC/ContextCleaner. Rank is
     // derived from the returned order (TakeOrdered is total-ordered).
     val rows = ranked.collect().zipWithIndex.map { case (r, i) =>
@@ -399,18 +400,21 @@ object Graph {
     *  - heap/512 reproduces the long-proven 16M-edge budget at the 8 GB
     *    dev/test JVM (where a 128M-edge broadcast was measured to
     *    starve the adjacency build's execution memory —
-    *    AGGREGATE_OUT_OF_MEMORY — because TWO endpoint joins each hold
-    *    a copy of the relation next to the running aggregate);
+    *    AGGREGATE_OUT_OF_MEMORY — when TWO endpoint joins each held
+    *    a copy of the relation next to the running aggregate; one
+    *    endpoint join holds it now);
     *  - at the scale gates' 80 GB JVM the budget opens to ~156M edges,
     *    which admits sf10's 120M-edge graph: the two resident
-    *    relations cost ~2-3 GB of an 80 GB heap while removing the
+    *    relations of that measurement cost ~2-3 GB of an 80 GB heap
+    *    while removing the
     *    E^1.5 attached-array shuffle that dominates the shuffle-form
     *    wall (same-VM A/B: sf1 130 s shuffled vs 32 s broadcast; sf10
     *    at 80 GB, 620 s shuffled vs 375 s broadcast — the sf10 ratio
     *    is smaller because the broadcast build itself pays a 120M-edge
     *    collect and the intersect CPU is branch-invariant).
-    * The 256M-edge hard cap (~1 GB of int entries, ~2-3 GB resident
-    * per join) bounds the worst case on very large heaps — past it the
+    * The 256M-edge hard cap (measured on int-array lists: ~1 GB of
+    * entries, ~2-3 GB resident per join; the packed lists now broadcast
+    * are smaller) bounds the worst case on very large heaps — past it the
     * shuffled equi-joins remain the formulation that holds at any
     * scale (sf100's ~1.2B edges stay shuffled at every realistic
     * heap). */
@@ -421,16 +425,17 @@ object Graph {
     * checkpointed intermediates the caller must release once the
     * bounded result is collected. Exposed for the plan-shape guards.
     *
-    * maxBroadcastEdges gates HOW adj(s)/adj(d) reach each edge. The
-    * adjacency table is edge-count entries in total (each oriented
+    * maxBroadcastEdges gates HOW adj(d) reaches each edge (adj(s)
+    * arrives with it: the edges are exploded out of the higher-lists).
+    * The adjacency table is edge-count entries in total (each oriented
     * edge appears in exactly one higher-list), so up to the budget it
-    * broadcasts and both endpoint joins become broadcast-hash probes
+    * broadcasts and the endpoint join becomes a broadcast-hash probe
     * of one resident map — no shuffle carries an edge row with a
-    * neighbor ARRAY attached. That attached-array volume is the real
+    * neighbor list attached. That attached-list volume is the real
     * cost of the shuffle form: sum over edges of |adj(s)|+|adj(d)| =
     * sum of squared higher-degrees, ~50x the edge table at sf1
     * (measured: the intersect stage fell 115 s -> 8 s at 12M edges).
-    * Past the budget the equi-joins shuffle — the formulation that
+    * Past the budget the equi-join shuffles — the formulation that
     * holds at any scale. The default budget is heap-derived (see
     * defaultMaxBroadcastEdges) so the same binary picks broadcast on a
     * gate-sized JVM and shuffle on a small one; both branches produce
@@ -438,8 +443,7 @@ object Graph {
     * triangle set — GraphSpec). */
   private[graft] def q87RankedPlan(
       spark: SparkSession, dir: String,
-      maxBroadcastEdges: Long = defaultMaxBroadcastEdges,
-      forceWideIds: Boolean = false): (DataFrame, Seq[DataFrame]) = {
+      maxBroadcastEdges: Long = defaultMaxBroadcastEdges): (DataFrame, Seq[DataFrame]) = {
     // edge-sized but skinny (2 longs/row); checkpointed because three
     // consumers (degree, orientation, and the final readout join)
     // would otherwise each re-derive the edge pipeline from the scan
@@ -457,84 +461,57 @@ object Graph {
       .select(
         when(lowFirst, col("u")).otherwise(col("v")).as("s"),
         when(lowFirst, col("v")).otherwise(col("u")).as("d"))
-      .localCheckpoint() // reused by the adjacency build + both joins
-    // NARROW-ID gate: the adjacency lists are the join's dominant
-    // shuffle/broadcast payload (sum-of-squared-higher-degrees entries
-    // in total — the algorithm's E^1.5 volume), so their element width
-    // is the one constant factor left to cut. When every node id fits
-    // in 32 bits — checked, not assumed, via a min/max over the
-    // node-sized deg frame — the lists carry ints (half the bytes,
-    // and the merge kernel compares ints); ids past 2^31 keep the
-    // int64 encoding. Both branches produce bit-identical credits
-    // (ids are exact either way; GraphSpec replays the wide branch
-    // against the narrow one on the same corpus).
-    val idBounds = deg.agg(min(col("node")).as("lo"), max(col("node")).as("hi")).head()
-    val narrowIds = !forceWideIds && !idBounds.isNullAt(0) &&
-      idBounds.getLong(0) >= Int.MinValue.toLong &&
-      idBounds.getLong(1) <= Int.MaxValue.toLong
     import org.apache.spark.sql.graftbridge.Bridge.{column => exprCol, expression => exprOf}
     // edge count is free on the checkpointed frame; the gate decides
-    // broadcast vs shuffle for BOTH endpoint joins together
+    // broadcast vs shuffle for the endpoint join
     val bcast = und.count() <= maxBroadcastEdges
-    // SHUFFLE-form adjacency encoding (r14; guide §2.3 "shuffle fewer
-    // bytes"): past the broadcast budget the neighbor lists ride the
-    // second endpoint join's exchange attached to every oriented edge
-    // — the sum-of-squared-higher-degrees E^1.5 volume that dominates
-    // the shuffle-form wall — so each list is DELTA-VARINT PACKED into
-    // a binary column (measured 1.68 B/entry on the sf1 graph vs
-    // 4 B int / 8 B long array elements) and the intersect kernel
-    // merges the two packed streams directly. The broadcast branch
-    // keeps plain sorted arrays: its lists never cross an exchange
-    // (one resident relation, probed in place), so packing would add
-    // decode work for zero byte savings. Both branches produce
-    // bit-identical credits (the encoding is lossless; GraphSpec pins
-    // packed-shuffle against broadcast on the same corpus).
-    val nbrsSorted = sort_array(collect_list(
-      if (narrowIds) col("d").cast("int") else col("d")))
-    val nbrsEnc =
-      if (bcast) nbrsSorted
-      else if (narrowIds) exprCol(graft.functions.PackSortedInts(exprOf(nbrsSorted)))
-      else exprCol(graft.functions.PackSortedLongs(exprOf(nbrsSorted)))
+    // ADJACENCY ENCODING (one for both branches): each neighbor list —
+    // the join's dominant payload, sum-of-squared-higher-degrees
+    // entries in total (the algorithm's E^1.5 volume) — is
+    // DELTA-VARINT PACKED into a binary column (measured 1.68 B/entry
+    // on the sf1 graph vs 8 B per bigint array element), and the
+    // intersect kernel merges the two packed streams directly. On the
+    // shuffle branch that cuts the bytes riding the endpoint join's
+    // exchange; on the broadcast branch it shrinks the resident
+    // relation. The encoding does not depend on the id width, so ids
+    // past 2^32 take the same path (GraphSpec runs an offset corpus).
     // node-sized rows; each list is <= ~sqrt(E) long (compact-forward)
     val adjHi = oriented.groupBy(col("s").as("node"))
-      .agg(nbrsEnc.as("nbrs"))
-      .localCheckpoint() // reused by both endpoint joins
-    def side(from: String): DataFrame = {
-      val renamed = adjHi.select(col("node").as(from),
-        col("nbrs").as(s"nbrs_$from"))
-      if (bcast) broadcast(renamed) else renamed
-    }
-    def intersect(a: org.apache.spark.sql.Column, b: org.apache.spark.sql.Column) =
-      (bcast, narrowIds) match {
-        case (true, true) =>
-          exprCol(graft.functions.SortedIntIntersect(exprOf(a), exprOf(b)))
-        case (true, false) =>
-          exprCol(graft.functions.SortedLongIntersect(exprOf(a), exprOf(b)))
-        case (false, true) =>
-          exprCol(graft.functions.PackedIntIntersect(exprOf(a), exprOf(b)))
-        case (false, false) =>
-          exprCol(graft.functions.PackedLongIntersect(exprOf(a), exprOf(b)))
-      }
-    val triEdges = oriented
-      .join(side("s"), "s")
-      .join(side("d"), "d")
+      .agg(sort_array(collect_list(col("d"))).as("higher"))
+      .select(col("node"), col("higher"),
+        exprCol(graft.functions.PackSorted(exprOf(col("higher")))).as("nbrs"))
+      // read by the edge explode and the endpoint join; the plain
+      // lists (8 B/entry) cost half the (s, d) edge checkpoint they replace
+      .localCheckpoint()
+    // every oriented edge (s, d) sits in exactly one higher-list, so
+    // exploding adj(s) yields the edges with adj(s) already attached —
+    // only adj(d) needs a join
+    val adjD = adjHi.select(col("node").as("d"), col("nbrs").as("nbrs_d"))
+    val triEdges = adjHi
+      .select(col("node").as("s"), col("nbrs").as("nbrs_s"),
+        explode(col("higher")).as("d"))
+      .join(if (bcast) broadcast(adjD) else adjD, "d")
       .select(col("s"), col("d"),
-        intersect(col("nbrs_s"), col("nbrs_d")).as("common"))
-      .filter(size(col("common")) > 0)
+        exprCol(graft.functions.PackedIntersect(
+          exprOf(col("nbrs_s")), exprOf(col("nbrs_d")))).as("common"))
     // credit all three corners — s and d once per closing vertex, w
     // once — in a SINGLE pass: one struct array per edge, exploded.
     // The union-of-three-selects form re-evaluated the joins and the
     // intersect once per branch (no CSE across union branches;
-    // measured 3x the intersect cost at sf1).
+    // measured 3x the intersect cost at sf1). Edges that close no
+    // triangle credit 0 and drop AFTER the explode: a
+    // `size(common) > 0` filter on the edge is pushed into the join
+    // condition, which evaluates the intersect a second time for
+    // every closing edge.
     val credits = triEdges
       .select(explode(concat(
         array(
           struct(col("s").as("node"), size(col("common")).cast("long").as("c")),
           struct(col("d").as("node"), size(col("common")).cast("long").as("c"))),
-        transform(col("common"),
-          w => struct(w.cast("long").as("node"), lit(1L).as("c")))))
+        transform(col("common"), w => struct(w.as("node"), lit(1L).as("c")))))
         .as("nc"))
       .select(col("nc.node").as("node"), col("nc.c").as("c"))
+      .filter(col("c") > 0)
     // TakeOrdered (orderBy+limit), not a partition-less row_number
     // window: the q53 shape. The window form stayed cheap only while
     // WindowGroupLimit pruned per-partition — a property a formulation
@@ -545,6 +522,6 @@ object Graph {
       .select(col("node").as("part_key"), col("triangles"), col("degree"))
       .orderBy(col("triangles").desc, col("part_key").asc)
       .limit(20)
-    (ranked, Seq(und, deg, oriented, adjHi))
+    (ranked, Seq(und, deg, adjHi))
   }
 }

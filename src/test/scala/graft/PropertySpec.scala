@@ -191,24 +191,26 @@ class PropertySpec extends AnyFunSuite with graft.SparkFixture {
     new GenericArrayData(xs.map(x => x: Any).toArray)
 
   test("IVF cells: head equals nearest centroid, distances ascend, ids distinct") {
+    // the quantized kernels q45/q88/q90 run: exact int64 distances, so
+    // the nearest distance and the ascending order are exact equalities
     val gen = for {
       k <- Gen.choose(2, 6)
       dim <- Gen.choose(2, 12)
-      cents <- Gen.listOfN(k, Gen.listOfN(dim, Gen.choose(-5.0, 5.0)))
-      v <- Gen.listOfN(dim, Gen.choose(-5f, 5f))
-    } yield (cents.map(_.toArray).toArray, v)
+      cents <- Gen.listOfN(k, Gen.listOfN(dim, Gen.choose(-(1L << 25), 1L << 25)))
+      v <- Gen.listOfN(dim, Gen.choose(-(1L << 25), 1L << 25))
+    } yield (cents.map(_.toArray).toArray, v.toArray)
     samples(gen, 50).foreach { case (cents, v) =>
-      val arr = floatArray(v)
-      val near = ClusterKernels.nearest(arr, cents)
-      val cells = ClusterKernels.nearestCells(arr, cents, cents.length).toIntArray()
+      val arr = new GenericArrayData(v)
+      val near = ClusterKernels.nearestInt(arr, cents)
+      val cells = ClusterKernels.nearestCellsInt(arr, cents, cents.length).toIntArray()
       assert(cells(0) === near.getInt(0)) // p=1 == argmin
       assert(cells.distinct.length === cells.length) // each cell once
-      def d(c: Int): Double = cents(c).zip(v).map { case (a, b) =>
-        (b.toDouble - a) * (b.toDouble - a)
-      }.sum
+      def d(c: Int): Long = cents(c).zip(v).map { case (a, b) => (b - a) * (b - a) }.sum
       val dists = cells.map(d)
       assert(dists.zip(dists.tail).forall { case (a, b) => a <= b })
-      assert(math.abs(dists(0) - near.getDouble(1)) < 1e-9)
+      assert(dists(0) === near.getLong(1))
+      // sq_dist2 is the second-nearest distance (the silhouette's b)
+      assert(dists(1) === near.getLong(2))
     }
   }
 
@@ -437,77 +439,46 @@ class PropertySpec extends AnyFunSuite with graft.SparkFixture {
     }
   }
 
-  test("sortedLongIntersect equals set intersection on arbitrary sorted inputs") {
-    val gen = for {
-      a <- Gen.listOf(Gen.choose(-100L, 100L))
-      b <- Gen.listOf(Gen.choose(-100L, 100L))
-    } yield (a, b)
-    samples(gen, 50).foreach { case (a, b) =>
-      val sa = a.distinct.sorted.toArray
-      val sb = b.distinct.sorted.toArray
-      val got = ClusterKernels.sortedLongIntersect(
-        new GenericArrayData(sa), new GenericArrayData(sb)).toLongArray()
-      val expected = (sa.toSet & sb.toSet).toArray.sorted
-      assert(got.sameElements(expected),
-        s"a=${sa.mkString(",")} b=${sb.mkString(",")}")
-    }
-  }
-
-  test("sortedIntIntersect equals set intersection, incl. empty/negative/bounds") {
-    val gen = for {
-      a <- Gen.listOf(Gen.choose(-100, 100))
-      b <- Gen.listOf(Gen.choose(-100, 100))
-    } yield (a, b)
-    val edgeCases = Seq(
-      (Array.empty[Int], Array(1, 2, 3)),
-      (Array(1, 2, 3), Array.empty[Int]),
-      (Array(Int.MinValue, 0, Int.MaxValue), Array(Int.MinValue, Int.MaxValue)))
-    (samples(gen, 50).map { case (a, b) =>
-      (a.distinct.sorted.toArray, b.distinct.sorted.toArray)
-    } ++ edgeCases).foreach { case (sa, sb) =>
-      val got = ClusterKernels.sortedIntIntersect(
-        new GenericArrayData(sa), new GenericArrayData(sb)).toIntArray()
-      val expected = (sa.toSet & sb.toSet).toArray.sorted
-      assert(got.sameElements(expected),
-        s"a=${sa.mkString(",")} b=${sb.mkString(",")}")
-    }
-  }
-
   test("packed intersect equals the plain intersect, incl. negative/bounds ids") {
-    // r14 q87 shuffle-form encoding: delta-varint pack must be
-    // lossless — the packed-stream merge agrees with the plain-array
-    // merge on every input, including negative first values (zigzag)
-    // and full-range bounds
+    // q87's adjacency encoding: delta-varint pack must be lossless and
+    // width-free — one pack kernel fed int or long elements, and the
+    // packed-stream merge must equal Scala's set intersection on every
+    // input, including negative first values (zigzag) and full-range
+    // Int and Long bounds
+    def packInts(xs: Array[Int]) =
+      ClusterKernels.packSorted(new GenericArrayData(xs), longElems = false)
+    def packLongs(xs: Array[Long]) =
+      ClusterKernels.packSorted(new GenericArrayData(xs), longElems = true)
+    def check(sa: Array[Long], sb: Array[Long], pa: Array[Byte], pb: Array[Byte]): Unit = {
+      val got = ClusterKernels.packedIntersect(pa, pb).toLongArray()
+      val expected = (sa.toSet & sb.toSet).toArray.sorted
+      assert(got.sameElements(expected),
+        s"a=${sa.mkString(",")} b=${sb.mkString(",")}")
+    }
     val gen = for {
       a <- Gen.listOf(Gen.choose(-100, 100))
       b <- Gen.listOf(Gen.choose(-100, 100))
     } yield (a, b)
-    val edgeCases = Seq(
+    val intCases = samples(gen, 50).map { case (a, b) =>
+      (a.distinct.sorted.toArray, b.distinct.sorted.toArray)
+    } ++ Seq(
       (Array.empty[Int], Array(1, 2, 3)),
       (Array(1, 2, 3), Array.empty[Int]),
       (Array(Int.MinValue, -7, 0, Int.MaxValue), Array(Int.MinValue, -7, Int.MaxValue)))
-    (samples(gen, 50).map { case (a, b) =>
-      (a.distinct.sorted.toArray, b.distinct.sorted.toArray)
-    } ++ edgeCases).foreach { case (sa, sb) =>
-      val pa = ClusterKernels.packSortedInts(new GenericArrayData(sa))
-      val pb = ClusterKernels.packSortedInts(new GenericArrayData(sb))
-      val got = ClusterKernels.packedIntIntersect(pa, pb).toIntArray()
-      val plain = ClusterKernels.sortedIntIntersect(
-        new GenericArrayData(sa), new GenericArrayData(sb)).toIntArray()
-      assert(got.sameElements(plain),
-        s"a=${sa.mkString(",")} b=${sb.mkString(",")}")
-      // long twin over the same values widened (incl. Long bounds case)
+    intCases.foreach { case (sa, sb) =>
       val la = sa.map(_.toLong); val lb = sb.map(_.toLong)
-      val qa = ClusterKernels.packSortedLongs(new GenericArrayData(la))
-      val qb = ClusterKernels.packSortedLongs(new GenericArrayData(lb))
-      val gotL = ClusterKernels.packedLongIntersect(qa, qb).toLongArray()
-      assert(gotL.sameElements(plain.map(_.toLong)))
+      // int and long elements of the same values pack to the same bytes
+      assert(packInts(sa).sameElements(packLongs(la)))
+      check(la, lb, packInts(sa), packInts(sb))
     }
-    val boundsL = (Array(Long.MinValue, -1L, 0L, Long.MaxValue),
-      Array(Long.MinValue, 0L, Long.MaxValue))
-    val pa = ClusterKernels.packSortedLongs(new GenericArrayData(boundsL._1))
-    val pb = ClusterKernels.packSortedLongs(new GenericArrayData(boundsL._2))
-    assert(ClusterKernels.packedLongIntersect(pa, pb).toLongArray()
-      .sameElements(Array(Long.MinValue, 0L, Long.MaxValue)))
+    val longGen = for {
+      a <- Gen.listOf(Gen.choose(Long.MinValue, Long.MaxValue))
+      b <- Gen.listOf(Gen.choose(Long.MinValue, Long.MaxValue))
+      shared <- Gen.listOf(Gen.choose(Long.MinValue, Long.MaxValue))
+    } yield ((a ++ shared).distinct.sorted.toArray, (b ++ shared).distinct.sorted.toArray)
+    (samples(longGen, 50) ++ Seq(
+      (Array.empty[Long], Array.empty[Long]),
+      (Array(Long.MinValue, -1L, 0L, Long.MaxValue), Array(Long.MinValue, 0L, Long.MaxValue))))
+      .foreach { case (la, lb) => check(la, lb, packLongs(la), packLongs(lb)) }
   }
 }

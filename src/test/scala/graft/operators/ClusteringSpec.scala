@@ -6,6 +6,20 @@ import graft.SparkFixture
 
 class ClusteringSpec extends AnyFunSuite with SparkFixture {
 
+  /** One integer assignment pass (the NearestCentroidInt step every
+    * Lloyd's iteration runs) over a (vec_id, embedding) frame. */
+  private def assignQuantized(df: org.apache.spark.sql.DataFrame,
+      centroids: Array[Array[Long]]): Array[org.apache.spark.sql.Row] = {
+    import org.apache.spark.sql.graftbridge.Bridge.{column, expression}
+    df.select(col("vec_id"), column(graft.functions.NearestCentroidInt(
+        expression(Clustering.quantizedCol), centroids)).as("asg"))
+      .select(col("vec_id"), col("asg.*")).collect()
+  }
+
+  /** A centroid with every coordinate at `x`, in quantized units. */
+  private def quantizedCentroid(x: Double): Array[Long] =
+    Array.fill(8)(math.floor(x * Clustering.QuantScale).toLong)
+
   test("kmeans separates two obvious blobs") {
     import spark.implicits._
     // blob A near (10,10,...), blob B near (-10,-10,...); k=2
@@ -14,10 +28,10 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture {
     val rows = (0L to 5L).map(i => (i, vec(10f, 0.1f * i))) ++
       (6L to 11L).map(i => (i, vec(-10f, 0.1f * i)))
     val df = rows.toDF("vec_id", "embedding")
-    df.createOrReplaceTempView("___blobs")
     // run assignment with centroids from each blob
-    val centroids = Array(Array.fill(8)(10.0), Array.fill(8)(-10.0))
-    val out = Clustering.assign(df, centroids).collect()
+    val centroids = Array(quantizedCentroid(10.0), quantizedCentroid(-10.0))
+    val out = assignQuantized(df, centroids)
+    assert(out.length === rows.length)
     out.foreach { r =>
       val expected = if (r.getAs[Long]("vec_id") <= 5L) 0 else 1
       assert(r.getAs[Int]("cluster") === expected)
@@ -96,29 +110,16 @@ class ClusteringSpec extends AnyFunSuite with SparkFixture {
     import spark.implicits._
     val rows = Seq((0L, Array.fill(8)(10f)), (1L, Array.fill(8)(-10f)))
     val df = rows.toDF("vec_id", "embedding")
-    val centroids = Array(Array.fill(8)(10.0), Array.fill(8)(-10.0))
-    val out = Clustering.assign(df, centroids).collect()
+    val centroids = Array(quantizedCentroid(10.0), quantizedCentroid(-10.0))
+    val out = assignQuantized(df, centroids)
+    assert(out.length === 2)
     out.foreach { r =>
-      val a = math.sqrt(r.getAs[Double]("sq_dist"))
-      val b = math.sqrt(r.getAs[Double]("sq_dist2"))
+      val a = math.sqrt(r.getAs[Long]("sq_dist").toDouble)
+      val b = math.sqrt(r.getAs[Long]("sq_dist2").toDouble)
       assert(a === 0.0) // sits on its centroid
       assert(b > 0.0)
       assert((b - a) / math.max(a, b) === 1.0)
     }
-  }
-
-  test("float-path IVF machinery (general-range fallback) stays correct") {
-    // the float NearestCells/centroids remain the path for data whose
-    // coordinate range breaks the 2^24 quantization's int64 envelope
-    import org.apache.spark.sql.catalyst.util.GenericArrayData
-    val v = new GenericArrayData(Array.fill(8)(9.5f))
-    val cents = Array(Array.fill(8)(10.0), Array.fill(8)(-10.0))
-    val cells = graft.functions.ClusterKernels.nearestCells(v, cents, 2)
-    assert(cells.toIntArray().sameElements(Array(0, 1)))
-    val c1 = Clustering.centroids(spark, sfDir, k = 4, iters = 2)
-    val c2 = Clustering.centroids(spark, sfDir, k = 4, iters = 2)
-    assert(c1.length === 4 && c1.forall(_.length === 64))
-    assert(c1.map(_.toSeq).toSeq === c2.map(_.toSeq).toSeq, "deterministic training")
   }
 
   test("kmeans is deterministic across runs") {

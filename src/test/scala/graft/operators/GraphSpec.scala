@@ -194,40 +194,46 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     assert(got.nonEmpty)
   }
 
-  test("q87 narrow-id (int) and wide-id (long) adjacency branches agree") {
-    // the fixture's part keys fit in 32 bits, so the default plan takes
-    // the narrow branch; forcing the wide branch must yield the exact
-    // same ranked result (ids are exact in both encodings)
-    def ranked(forceWide: Boolean): Seq[(Long, Long, Long)] = {
-      val (df, cks) = Graph.q87RankedPlan(spark, sfDir, forceWideIds = forceWide)
-      val rows = df.collect().map(r => (r.getAs[Long]("part_key"),
-        r.getAs[Long]("triangles"), r.getAs[Long]("degree"))).toSeq
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(cks: _*)
-      rows
+  /** q87's ranked (part_key, triangles, degree) rows at one broadcast
+    * budget, checkpoints released. */
+  private def q87Ranked(dir: String, budget: Long): Seq[(Long, Long, Long)] = {
+    val (df, cks) = Graph.q87RankedPlan(spark, dir, maxBroadcastEdges = budget)
+    val rows = df.collect().map(r => (r.getAs[Long]("part_key"),
+      r.getAs[Long]("triangles"), r.getAs[Long]("degree"))).toSeq
+    org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(cks: _*)
+    rows
+  }
+
+  test("q87 ids past 2^32: l_partkey + 2^40 ranks the same triangles, shifted") {
+    // the packed adjacency encoding does not depend on id width: shift
+    // every part key past 2^32 and the ranking must be the fixture's,
+    // shifted by the same amount (the offset keeps every (degree, id)
+    // order, so orientation and ties are unchanged) — on the broadcast
+    // branch and on the shuffle branch
+    val offset = 1L << 40
+    val root = java.nio.file.Files.createTempDirectory("graft-q87-wide")
+    try {
+      spark.read.parquet(s"$sfDir/lineitem.parquet")
+        .withColumn("l_partkey", col("l_partkey").cast("long") + lit(offset))
+        .write.parquet(s"$root/lineitem.parquet")
+      val expected = q87Ranked(sfDir, Long.MaxValue).map { case (p, t, d) =>
+        (p + offset, t, d)
+      }
+      assert(expected.nonEmpty)
+      assert(q87Ranked(root.toString, Long.MaxValue) === expected)
+      assert(q87Ranked(root.toString, 0L) === expected)
+    } finally {
+      java.nio.file.Files.walk(root).sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => { java.nio.file.Files.deleteIfExists(p); () })
     }
-    val narrow = ranked(forceWide = false)
-    val wide = ranked(forceWide = true)
-    assert(narrow === wide)
-    assert(narrow.nonEmpty)
   }
 
   test("q87 packed-shuffle branch (budget 0) matches the broadcast branch") {
-    // r14: past the broadcast budget the adjacency lists cross the
-    // endpoint joins' exchanges delta-varint packed and the intersect
-    // merges the packed streams. The encoding is lossless, so the
-    // ranked result must be IDENTICAL to the broadcast branch's —
-    // in both id encodings (int deltas and long deltas).
-    def ranked(budget: Long, forceWide: Boolean): Seq[(Long, Long, Long)] = {
-      val (df, cks) = Graph.q87RankedPlan(spark, sfDir,
-        maxBroadcastEdges = budget, forceWideIds = forceWide)
-      val rows = df.collect().map(r => (r.getAs[Long]("part_key"),
-        r.getAs[Long]("triangles"), r.getAs[Long]("degree"))).toSeq
-      org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(cks: _*)
-      rows
-    }
-    val bcastNarrow = ranked(Long.MaxValue, forceWide = false)
-    assert(ranked(0L, forceWide = false) === bcastNarrow)
-    assert(ranked(0L, forceWide = true) === bcastNarrow)
-    assert(bcastNarrow.nonEmpty)
+    // past the broadcast budget the packed adjacency lists cross the
+    // endpoint join's exchange instead of riding a broadcast. The
+    // ranked result must be IDENTICAL to the broadcast branch's.
+    val bcast = q87Ranked(sfDir, Long.MaxValue)
+    assert(q87Ranked(sfDir, 0L) === bcast)
+    assert(bcast.nonEmpty)
   }
 }

@@ -290,16 +290,15 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
     val p = ranked.queryExecution.executedPlan.toString
     org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(cks: _*)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
-    // the closing check is the per-edge sorted intersect, not a join
-    // against a wedge table; the fixture's ids fit in 32 bits, so the
-    // narrow-id gate must have picked the int kernel
-    assert(p.contains("sorted_int_intersect"))
+    // the closing check is the per-edge packed intersect, not a join
+    // against a wedge table
+    assert(p.contains("packed_intersect"))
     // the intersect expression appears exactly once: the single-pass
     // credits explode must not re-evaluate the joins per corner (the
     // union-of-three-selects form did — 3x the intersect cost at sf1)
-    assert(p.split("sorted_int_intersect").length - 1 <= 2,
+    assert(p.split("packed_intersect").length - 1 <= 2,
       "intersect evaluated once (plan may echo it in a Project alias)")
-    // under the edge budget both endpoint joins are broadcast probes of
+    // under the edge budget the endpoint join is a broadcast probe of
     // the node-sized adjacency — no neighbor ARRAY rides a shuffle
     assert(p.contains("BroadcastHashJoin"))
     // final ranking: TakeOrdered (rank derived from returned order) —
@@ -314,13 +313,11 @@ class PlanQualitySpec extends AnyFunSuite with SparkFixture {
     org.apache.spark.sql.graftbridge.Bridge.releaseCheckpoints(cks: _*)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
     // r14: the shuffle form carries DELTA-VARINT PACKED adjacency
-    // (binary column) across the endpoint joins' exchanges and merges
-    // the packed streams directly — the plain-array kernel would mean
-    // the packing silently fell out of the hot branch
-    assert(p.contains("packed_int_intersect"))
-    assert(!p.contains("sorted_int_intersect"))
+    // (binary column) across the endpoint join's exchange and merges
+    // the packed streams directly
+    assert(p.contains("packed_intersect"))
     // the fallback must not silently re-broadcast a table the gate
-    // judged too big: the endpoint joins become shuffled equi-joins
+    // judged too big: the endpoint join becomes a shuffled equi-join
     assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin"))
     assert(p.contains("TakeOrderedAndProject"))
   }

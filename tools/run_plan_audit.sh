@@ -33,7 +33,7 @@ SPARK_GRAFT_CPUS=$CPUS java $JOPTS -Xmx16g -cp "$CP" \
 # defaultMaxBroadcastEdges), so the audit must run at the SAME heap the
 # sf10 bench uses (run_sf10_bench.sh: 80g) to document the branch the
 # bench actually exercises: at 80g the 119.6M-edge sf10 graph fits the
-# ~156M-edge budget and both endpoint joins broadcast. The small-heap
+# ~156M-edge budget and the endpoint join broadcasts. The small-heap
 # shuffle fallback stays spec-proven (PlanQualitySpec, budget=0).
 # The heap is PINNED here (SPARK_GRAFT_XMX deliberately ignored for
 # this step, ADVICE r13): the "broadcast" expectation below is only
