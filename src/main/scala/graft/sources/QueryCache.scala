@@ -1,6 +1,8 @@
 package graft.sources
 
+import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
 
@@ -39,6 +41,17 @@ import java.security.MessageDigest
   * PUT. Listing-after-put is strongly consistent on current S3;
   * InfraSpec simulates the rename-free path by resolving without any
   * CURRENT file.
+  *
+  * READ COST: a hit costs the version resolution (CURRENT or marker
+  * lookup, the _SUCCESS and TTL checks, all re-run on every read) plus
+  * one file listing of the version dir, and starts no Spark job before
+  * the caller's action. A publish pays the one parquet schema read of
+  * its new version and seeds the session's schema memo with it, so
+  * later hits on that version skip schema inference. Keying the memo
+  * by version name is safe because version dirs are write-once: a
+  * `v-<millis>-<nonce>` name is never rewritten, and GC only deletes
+  * superseded versions. A version published by another session or
+  * process pays one schema read on its first hit here.
   */
 object QueryCache {
 
@@ -94,12 +107,12 @@ object QueryCache {
     def live: Option[Path] = currentVersion(entry)
       .filter(v => System.currentTimeMillis() - versionMillis(v) <= ttlMillis)
     live match {
-      case Some(v) => spark.read.parquet(v.toString)
+      case Some(v) => open(spark, entry, v)
       case None =>
         lockFor(entry).synchronized {
           // double-check: the build we queued behind may be our answer
           live match {
-            case Some(v) => spark.read.parquet(v.toString)
+            case Some(v) => open(spark, entry, v)
             case None => publishSingleFlight(spark, entry, ttlMillis, build)
           }
         }
@@ -144,7 +157,7 @@ object QueryCache {
         val merged = currentVersion(entry)
           .filter(v => System.currentTimeMillis() - versionMillis(v) <= ttlMillis)
           .map { v =>
-            val current = spark.read.parquet(v.toString)
+            val current = open(spark, entry, v)
             // anti-join keeps cached rows whose key is NOT replaced
             current.join(delta.select(mergeKey.map(col): _*).distinct(),
                 mergeKey, "left_anti")
@@ -209,6 +222,28 @@ object QueryCache {
       .find(v => Files.exists(v.resolve("_SUCCESS")))
   }
 
+  /** Open a resolved, complete version dir: the one read site of
+    * every cache path (hit, locked re-check, lease poll, merge base,
+    * publish read-back). The session memo keeps, per entry, the last
+    * version opened and its schema (READ COST in the object doc). A
+    * version it names opens with that schema, a file listing and no
+    * job; any other opens with `spark.read.parquet`, whose schema
+    * inference runs a footer-reading job, and replaces the entry. The
+    * value holds no Dataset or session: the weakly keyed memo must
+    * never pin the session it belongs to. */
+  private def open(spark: SparkSession, entry: Path, v: Path): DataFrame = {
+    val memo = Sessions.memoMap(spark)
+    val key = ("querycache", entry.toAbsolutePath.toString)
+    val name = v.getFileName.toString
+    memo.get(key) match {
+      case (`name`, schema: StructType) => spark.read.schema(schema).parquet(v.toString)
+      case _ =>
+        val df = spark.read.parquet(v.toString)
+        memo.put(key, (name, df.schema))
+        df
+    }
+  }
+
   /** Millis encoded in a v-<millis>-<nonce> name; malformed names
     * (a manual copy, a truncated write) read as infinitely old, so
     * readers treat them as expired and GC reclaims them — never an
@@ -268,7 +303,7 @@ object QueryCache {
       result
         .orElse(currentVersion(entry)
           .filter(v => System.currentTimeMillis() - versionMillis(v) <= ttlMillis))
-        .map(v => spark.read.parquet(v.toString))
+        .map(open(spark, entry, _))
         .getOrElse(publish(spark, entry, build)) // holder never published
     }
   }
@@ -294,7 +329,7 @@ object QueryCache {
         StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     }
     gc(entry, vName)
-    spark.read.parquet(entry.resolve(vName).toString)
+    open(spark, entry, entry.resolve(vName))
   }
 
   /** Delete superseded versions and orphaned tmp dirs past the grace

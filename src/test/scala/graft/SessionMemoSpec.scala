@@ -71,4 +71,44 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     assert(payloadRef.get == null,
       "a collected session's memo payloads must be collectable with it")
   }
+
+  test("a dropped session that served query cache hits is collectable") {
+    // the cache's schema memo lives in the session's memo map; its
+    // value must not reference the session, or the weak key could
+    // never be cleared. newSession shares the suite's SparkContext, so
+    // the session is not stopped (stop() would end the context); it is
+    // dropped, which leaves the memo store in the same state
+    val before = Sessions.liveMemoSessionCount
+    var sessionRef: java.lang.ref.WeakReference[AnyRef] = null
+    def serve(): Unit = {
+      val s = spark.newSession()
+      import s.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft-memo-cache").toString
+      val cfg = "memo-collectable"
+      sources.QueryCache.cached(s, dir, cfg)(Seq(1, 2).toDF("x"))
+      // collect, not count: count() plans an aggregate, and a session
+      // that ran a shuffle stays reachable from Spark's own shuffle
+      // state, outside the memo store this spec is about
+      (1 to 3).foreach(_ =>
+        assert(sources.QueryCache.cached(s, dir, cfg)(sys.error("must not rebuild"))
+          .collect().length === 2))
+      val entry = java.nio.file.Paths.get(dir, sources.QueryCache.cacheKey(cfg))
+      assert(Sessions.memoMap(s).containsKey(
+        ("querycache", entry.toAbsolutePath.toString)),
+        "the hits must have gone through the schema memo")
+      sessionRef = new java.lang.ref.WeakReference(s)
+    }
+    serve()
+    var tries = 0
+    while ((sessionRef.get != null || Sessions.liveMemoSessionCount > before) &&
+           tries < 50) {
+      System.gc()
+      Thread.sleep(50)
+      tries += 1
+    }
+    assert(sessionRef.get == null,
+      "a session that served query cache hits must be collectable once dropped")
+    assert(Sessions.liveMemoSessionCount <= before,
+      "a collected session must leave the memo store")
+  }
 }

@@ -193,6 +193,81 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
     assert(!Files.exists(lease), "the stolen lease is released after publish")
   }
 
+  /** `body`'s result and the Spark jobs it started on this thread:
+    * the listener counts only this call's job group, so jobs of other
+    * threads never count, and the bus is drained before reading. */
+  private def jobsStartedBy[T](body: => T): (T, Int) = {
+    val sc = spark.sparkContext
+    val group = s"infraspec-jobs-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          jobs.incrementAndGet()
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "infraspec job count")
+      val out = try body finally sc.clearJobGroup()
+      org.apache.spark.graftspec.ListenerBus.drain(sc)
+      (out, jobs.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("query cache: a warm hit starts no Spark job; a version's schema is read once") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-warm").toString
+    val cfg = """{"q":"warm-hit"}"""
+    var builds = 0
+    def build = { builds += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
+    QueryCache.cached(spark, dir, cfg)(build) // miss: build + publish
+    val n = 5
+    // the publish seeded this session's schema memo: hits resolve the
+    // version and list its files, and no job runs before the action
+    val (hits, warmJobs) = jobsStartedBy {
+      (1 to n).map(_ => QueryCache.cached(spark, dir, cfg)(build))
+    }
+    assert(warmJobs === 0, s"$n warm hits started $warmJobs jobs")
+    assert(builds === 1)
+    hits.foreach(h => assert(h.orderBy("id").collect().map(_.getString(1)).toSeq === Seq("a", "b")))
+    // a session that did not publish infers the schema on its first
+    // hit only, not once per hit
+    val other = spark.newSession()
+    val (_, coldJobs) = jobsStartedBy {
+      (1 to n).foreach(_ => QueryCache.cached(other, dir, cfg)(build))
+    }
+    assert(coldJobs <= 1, s"$n hits in a fresh session started $coldJobs jobs")
+    assert(builds === 1)
+  }
+
+  test("query cache schema memo is per version: new columns show on the next hit") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-pervers").toString
+    val cfg = """{"q":"per-version"}"""
+    def hit = QueryCache.cached(spark, dir, cfg)(sys.error("must not rebuild"))
+    QueryCache.cached(spark, dir, cfg)(Seq((1, "a")).toDF("id", "v"))
+    assert(hit.columns.toSeq === Seq("id", "v"))
+    // a refresh whose build adds a column: the next hit reads the new
+    // version with its own schema, not the memo of the old one
+    QueryCache.refresh(spark, dir, cfg)(
+      Seq((1, "a", 10L), (2, "b", 20L)).toDF("id", "v", "x"))
+    val refreshed = hit
+    assert(refreshed.columns.toSeq === Seq("id", "v", "x"))
+    assert(refreshed.orderBy("id").collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq ===
+      Seq((1, "a", 10L), (2, "b", 20L)))
+    // an out-of-band publish from another session: this session's memo
+    // still names the previous version, so the hit must not use it
+    QueryCache.refresh(spark.newSession(), dir, cfg)(
+      Seq((3, "c", 30L, true)).toDF("id", "v", "x", "flag"))
+    val outOfBand = hit
+    assert(outOfBand.columns.toSeq === Seq("id", "v", "x", "flag"))
+    assert(outOfBand.collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getBoolean(3))).toSeq ===
+      Seq((3, "c", 30L, true)))
+  }
+
   test("cache key is deterministic and config-sensitive") {
     assert(QueryCache.cacheKey("abc") === QueryCache.cacheKey("abc"))
     assert(QueryCache.cacheKey("abc") !== QueryCache.cacheKey("abd"))

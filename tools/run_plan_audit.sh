@@ -2,7 +2,8 @@
 # Plans-at-scale audit: dump the formatted plans of the heaviest
 # queries and assert the runtime branch gates (q17 adaptive cosine,
 # q87 adjacency broadcast) chose the DOCUMENTED branch in BOTH
-# regimes: sf0.1 (dense + broadcast) and sf10 (postings + shuffle).
+# regimes: sf0.1 (dense + broadcast) and sf10 (postings + broadcast at
+# the pinned 80g bench heap).
 # Committed artifacts: PLANS_SF01.md, PLANS_SF10.md.
 set -euo pipefail
 cd "$(dirname "$0")/.."
