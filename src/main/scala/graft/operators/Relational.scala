@@ -1,8 +1,9 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Exprs.{dsum, revenue}
 
 /** Core relational operators — the query surface of the reference's
   * dashboards and scheduled transforms, re-expressed as declarative
@@ -17,9 +18,6 @@ import org.apache.spark.sql.functions._
   */
 object Relational {
 
-  /** Exact sum of a double column: decimal-accumulate, emit double. */
-  private def dsum(c: Column): Column = sum(c.cast("decimal(18,2)")).cast("double")
-
   /** Pricing summary rollup — filter + groupBy aggregate with partial
     * (map-side) aggregation; mirrors the reference's metric rollups
     * (dash_app.py:384-409, metric_info "calculation" strings).
@@ -32,11 +30,8 @@ object Relational {
       .agg(
         dsum(col("l_quantity")).as("sum_qty"),
         dsum(col("l_extendedprice")).as("sum_base_price"),
-        sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("sum_disc_price"),
-        (sum(col("l_quantity").cast("decimal(18,2)")).cast("double") / count(lit(1)))
-          .as("avg_qty"),
+        revenue(col("l_extendedprice"), col("l_discount")).as("sum_disc_price"),
+        (dsum(col("l_quantity")) / count(lit(1))).as("avg_qty"),
         count(lit(1)).as("count_order"))
   }
 
@@ -60,9 +55,7 @@ object Relational {
       .join(broadcast(r), col("n_regionkey") === col("r_regionkey"))
       .groupBy(col("r_name").as("region_name"), col("n_name").as("nation_name"))
       .agg(
-        sum(col("l_extendedprice").cast("decimal(18,2)") *
-          (lit(1).cast("decimal(18,2)") - col("l_discount").cast("decimal(18,2)")))
-          .cast("double").as("revenue"),
+        revenue(col("l_extendedprice"), col("l_discount")).as("revenue"),
         count(lit(1)).as("line_count"))
   }
 

@@ -2,6 +2,8 @@ package graft.sources
 
 import graft.Sessions
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.UnsafeRow
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.security.MessageDigest
@@ -42,16 +44,35 @@ import java.security.MessageDigest
   * InfraSpec simulates the rename-free path by resolving without any
   * CURRENT file.
   *
-  * READ COST: a hit costs the version resolution (CURRENT or marker
-  * lookup, the _SUCCESS and TTL checks, all re-run on every read) plus
-  * one file listing of the version dir, and starts no Spark job before
-  * the caller's action. A publish pays the one parquet schema read of
-  * its new version and seeds the session's schema memo with it, so
-  * later hits on that version skip schema inference. Keying the memo
-  * by version name is safe because version dirs are write-once: a
-  * `v-<millis>-<nonce>` name is never rewritten, and GC only deletes
-  * superseded versions. A version published by another session or
-  * process pays one schema read on its first hit here.
+  * READ COST: every read re-runs the version resolution (CURRENT or
+  * marker lookup, the _SUCCESS and TTL checks). The session memo then
+  * keeps, per entry, the last version opened: its name, its schema and,
+  * when it is small, its rows (the hot tier).
+  *  - A hit on a hot version opens no file and starts no job before the
+  *    caller's action. It is served as a one-partition local relation,
+  *    so a global aggregate, sort or limit over it plans no Exchange and
+  *    runs one job.
+  *  - A hit on a version over budget lists the version's files and
+  *    scans its parquet with the memoized schema, also without a job
+  *    before the action.
+  *  - A version's first open in a session (normally its publish) reads
+  *    the schema from one file footer on the driver and, if the version
+  *    fits, collects its rows: at most one job.
+  * Keying the memo by version name is safe because version dirs are
+  * write-once: a `v-<millis>-<nonce>` name is never rewritten, and GC
+  * only deletes superseded versions.
+  *
+  * HOT-TIER BUDGETS, both derived from the heap (`Runtime.maxMemory`):
+  *  - per version, heap/512 (8 MB at a 4 GB heap): a version is
+  *    collected only if its parquet data files fit, and kept only if
+  *    its collected rows fit too;
+  *  - per JVM, heap/64, summed over every session's hot versions. It is
+  *    JVM-wide because a dropped session is not always collected (one
+  *    that ran a shuffle stays reachable from Spark's shuffle state), so
+  *    a per-session bound alone would not bound memory.
+  * A version that does not fit is served from parquet as above. Its
+  * bytes return to the JVM total when a newer version replaces it in
+  * the memo or when its holder is garbage-collected with the session.
   */
 object QueryCache {
 
@@ -206,14 +227,8 @@ object QueryCache {
     * as "previous version still live"). */
   private def markerVersion(entry: Path): Option[Path] = {
     if (!Files.isDirectory(entry)) return None
-    val listing = Files.list(entry)
-    val names =
-      try {
-        val b = Seq.newBuilder[String]
-        listing.forEach(p => b += p.getFileName.toString)
-        b.result()
-      } finally listing.close()
-    names.filter(_.startsWith(".current-v-"))
+    children(entry).map(_.getFileName.toString)
+      .filter(_.startsWith(".current-v-"))
       .map(_.stripPrefix(".current-"))
       .sortBy(n => (versionMillis(entry.resolve(n)), n))(Ordering.Tuple2(
         Ordering.Long.reverse, Ordering.String.reverse))
@@ -224,24 +239,113 @@ object QueryCache {
 
   /** Open a resolved, complete version dir: the one read site of
     * every cache path (hit, locked re-check, lease poll, merge base,
-    * publish read-back). The session memo keeps, per entry, the last
-    * version opened and its schema (READ COST in the object doc). A
-    * version it names opens with that schema, a file listing and no
-    * job; any other opens with `spark.read.parquet`, whose schema
-    * inference runs a footer-reading job, and replaces the entry. The
+    * publish read-back). A version the session memo names is served
+    * from the memo (READ COST in the object doc); any other is loaded
+    * and replaces the entry, releasing the replaced version's rows. The
     * value holds no Dataset or session: the weakly keyed memo must
     * never pin the session it belongs to. */
   private def open(spark: SparkSession, entry: Path, v: Path): DataFrame = {
     val memo = Sessions.memoMap(spark)
     val key = ("querycache", entry.toAbsolutePath.toString)
     val name = v.getFileName.toString
-    memo.get(key) match {
-      case (`name`, schema: StructType) => spark.read.schema(schema).parquet(v.toString)
+    val opened = memo.get(key) match {
+      case o: Opened if o.name == name => o
       case _ =>
-        val df = spark.read.parquet(v.toString)
-        memo.put(key, (name, df.schema))
-        df
+        val o = load(spark, v)
+        memo.put(key, o) match {
+          case old: Opened => old.hot.foreach(_.release())
+          case _ =>
+        }
+        o
     }
+    opened.hot match {
+      case Some(h) =>
+        Bridge.localFrame(spark, opened.schema,
+          scala.collection.immutable.ArraySeq.unsafeWrapArray(h.rows)).coalesce(1)
+      case None => spark.read.schema(opened.schema).parquet(v.toString)
+    }
+  }
+
+  /** What the session memo keeps for an entry: the version last
+    * opened, its schema and, if admitted to the hot tier, its rows. */
+  private final case class Opened(name: String, schema: StructType,
+      hot: Option[HotRows])
+
+  /** A version's first open in a session: the schema from one data
+    * file's footer (driver-side, no job) and, when the data files fit
+    * the hot-tier budgets, one collect of its rows. */
+  private def load(spark: SparkSession, v: Path): Opened = {
+    // Spark's own hidden-file rule skips _SUCCESS and the .crc files
+    val files = children(v).filter { p =>
+      val n = p.getFileName.toString
+      !n.startsWith("_") && !n.startsWith(".") && Files.isRegularFile(p)
+    }.sortBy(_.getFileName.toString)
+    require(files.nonEmpty, s"query cache version $v holds no parquet data file")
+    val schema = Bridge.parquetSchema(spark, files.head.toString)
+    val hot =
+      if (!HotTier.mayCollect(files.map(Files.size).sum)) None
+      else HotTier.admit(Bridge.collectUnsafe(spark.read.schema(schema).parquet(v.toString)))
+    Opened(v.getFileName.toString, schema, hot)
+  }
+
+  /** Rows of one hot version. `bytes` stays counted in the JVM total
+    * until [[release]] or until the holder is garbage-collected,
+    * whichever comes first. */
+  private[sources] final class HotRows(val rows: Array[UnsafeRow], bytes: Long) {
+    private val cleanable = HotTier.register(this, bytes)
+    def release(): Unit = cleanable.clean()
+  }
+
+  /** The hot tier's budgets and JVM-wide byte count (HOT-TIER BUDGETS
+    * in the object doc). */
+  private[sources] object HotTier {
+    private val heap = Runtime.getRuntime.maxMemory()
+
+    /** Largest version kept in memory, in bytes. Mutable only so that a
+      * spec can put a small version over it. */
+    @volatile private[sources] var versionBudget: Long = heap / 512
+
+    /** Bytes of hot rows all sessions of this JVM may hold together. */
+    val totalBudget: Long = heap / 64
+
+    /** Per-row heap cost beyond the row's bytes: the UnsafeRow object
+      * and its byte array's header. */
+    private val RowOverhead = 64L
+
+    private val held = new java.util.concurrent.atomic.AtomicLong(0L)
+    private val cleaner = java.lang.ref.Cleaner.create()
+
+    def heldBytes: Long = held.get
+
+    /** Whether a version with `parquetBytes` of data files is worth a
+      * collect: it fits the per-version budget and what the JVM total
+      * has left. */
+    def mayCollect(parquetBytes: Long): Boolean =
+      parquetBytes <= versionBudget && held.get + parquetBytes <= totalBudget
+
+    /** Collected rows, kept if their heap bytes fit both budgets. */
+    def admit(rows: Array[UnsafeRow]): Option[HotRows] = {
+      val bytes = rows.iterator.map(_.getSizeInBytes + RowOverhead).sum
+      if (bytes > versionBudget) return None
+      var cur = held.get
+      while (cur + bytes <= totalBudget && !held.compareAndSet(cur, cur + bytes))
+        cur = held.get
+      if (cur + bytes > totalBudget) None else Some(new HotRows(rows, bytes))
+    }
+
+    /** The action must not reference `holder`, or it is never run. */
+    def register(holder: AnyRef, bytes: Long): java.lang.ref.Cleaner.Cleanable =
+      cleaner.register(holder, () => { held.addAndGet(-bytes); () })
+  }
+
+  /** The entries of a directory. */
+  private def children(dir: Path): Seq[Path] = {
+    val listing = Files.list(dir)
+    try {
+      val b = Seq.newBuilder[Path]
+      listing.forEach(p => b += p)
+      b.result()
+    } finally listing.close()
   }
 
   /** Millis encoded in a v-<millis>-<nonce> name; malformed names
@@ -339,22 +443,19 @@ object QueryCache {
   private def gc(entry: Path, keep: String): Unit =
     try {
       val now = System.currentTimeMillis()
-      val listing = Files.list(entry)
-      try {
-        listing.forEach { p =>
-          val name = p.getFileName.toString
-          val stale =
-            (name.startsWith("v-") && name != keep &&
-              now - versionMillis(p) > GcGraceMillis) ||
-            // commit markers die with their version (keep's stays)
-            (name.startsWith(".current-v-") && name != s".current-$keep" &&
-              now - versionMillis(entry.resolve(
-                name.stripPrefix(".current-"))) > GcGraceMillis) ||
-            ((name.startsWith(".tmp-") || name.startsWith(".CURRENT-")) &&
-              now - Files.getLastModifiedTime(p).toMillis > GcGraceMillis)
-          if (stale) deleteRecursively(p)
-        }
-      } finally listing.close()
+      children(entry).foreach { p =>
+        val name = p.getFileName.toString
+        val stale =
+          (name.startsWith("v-") && name != keep &&
+            now - versionMillis(p) > GcGraceMillis) ||
+          // commit markers die with their version (keep's stays)
+          (name.startsWith(".current-v-") && name != s".current-$keep" &&
+            now - versionMillis(entry.resolve(
+              name.stripPrefix(".current-"))) > GcGraceMillis) ||
+          ((name.startsWith(".tmp-") || name.startsWith(".CURRENT-")) &&
+            now - Files.getLastModifiedTime(p).toMillis > GcGraceMillis)
+        if (stale) deleteRecursively(p)
+      }
     } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
 
   private def deleteRecursively(p: Path): Unit = {

@@ -122,6 +122,49 @@ object Bridge {
     val asyncSweeps = new java.util.concurrent.atomic.AtomicLong(0L)
   }
 
+  /** A frame over rows already on the driver: the LocalRelation that
+    * `createDataFrame` builds, minus its external-row conversion, so
+    * every value (NaN bits, -0.0, microsecond timestamps) is served
+    * exactly as it was collected. */
+  def localFrame(spark: org.apache.spark.sql.SparkSession,
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.catalyst.InternalRow])
+      : org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
+      org.apache.spark.sql.catalyst.plans.logical.LocalRelation(
+        org.apache.spark.sql.catalyst.types.DataTypeUtils.toAttributes(schema), rows))
+
+  /** `df`'s rows in Spark's internal format, collected by one job that
+    * runs as a tracked SQL execution. Each row owns its bytes
+    * (SparkPlan.executeCollect decodes every row into its own array). */
+  def collectUnsafe(df: org.apache.spark.sql.DataFrame)
+      : Array[org.apache.spark.sql.catalyst.expressions.UnsafeRow] = {
+    val qe = df.queryExecution
+    org.apache.spark.sql.execution.SQLExecution.withNewExecutionId(qe)(
+      qe.executedPlan.executeCollect())
+      .map(_.asInstanceOf[org.apache.spark.sql.catalyst.expressions.UnsafeRow])
+  }
+
+  /** The schema a `spark.read.parquet` of a Spark-written file reports,
+    * read from that file's footer on the driver: the same footer
+    * conversion schema inference runs, without its Spark job, made
+    * nullable as a file-source read makes it. */
+  def parquetSchema(spark: org.apache.spark.sql.SparkSession, file: String)
+      : org.apache.spark.sql.types.StructType = {
+    import org.apache.spark.sql.execution.datasources.parquet.{
+      ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
+    val s = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+    val path = new org.apache.hadoop.fs.Path(file)
+    val footer = ParquetFooterReader.readFooter(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        path, s.sessionState.newHadoopConf()),
+      org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER)
+    ParquetFileFormat.readSchemaFromFooter(
+      new org.apache.parquet.hadoop.Footer(path, footer),
+      new ParquetToSparkSchemaConverter(s.sessionState.conf)).asNullable
+  }
+
   /** Imperative function registration on a live session (the
     * config-time path is SparkSessionExtensions.injectFunction). */
   def registerFunction(

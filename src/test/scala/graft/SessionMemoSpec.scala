@@ -111,4 +111,50 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     assert(Sessions.liveMemoSessionCount <= before,
       "a collected session must leave the memo store")
   }
+
+  test("a dropped session that served hot-tier query cache hits is collectable") {
+    // the hot tier keeps a version's rows in the session memo; neither
+    // they nor their holder may reference the session, and the holder
+    // must go with it
+    val before = Sessions.liveMemoSessionCount
+    var sessionRef: java.lang.ref.WeakReference[AnyRef] = null
+    var rowsRef: java.lang.ref.WeakReference[AnyRef] = null
+    def serve(): Unit = {
+      val s = spark.newSession()
+      import s.implicits._
+      val dir = java.nio.file.Files.createTempDirectory("graft-memo-hot").toString
+      val cfg = "memo-hot-collectable"
+      sources.QueryCache.cached(s, dir, cfg)(Seq((1, "a"), (2, "b")).toDF("x", "y"))
+      // collect() only, for the reason given in the spec above
+      (1 to 3).foreach { _ =>
+        val hit = sources.QueryCache.cached(s, dir, cfg)(sys.error("must not rebuild"))
+        assert(hit.collect().length === 2)
+        assert(hit.queryExecution.executedPlan.toString.contains("LocalTableScan"),
+          "the hits must have been served from memory")
+      }
+      val entry = java.nio.file.Paths.get(dir, sources.QueryCache.cacheKey(cfg))
+      // the memo value is (version name, schema, hot rows)
+      val hot = Sessions.memoMap(s).get(("querycache", entry.toAbsolutePath.toString))
+        .asInstanceOf[Product].productElement(2).asInstanceOf[Option[AnyRef]]
+      assert(hot.isDefined, "the version must be in the hot tier")
+      sessionRef = new java.lang.ref.WeakReference(s)
+      rowsRef = new java.lang.ref.WeakReference(hot.get)
+    }
+    serve()
+    var tries = 0
+    while ((sessionRef.get != null || rowsRef.get != null ||
+            Sessions.liveMemoSessionCount > before) && tries < 50) {
+      System.gc()
+      Thread.sleep(50)
+      // size() expunges the collected session's entry, releasing its
+      // memo map and with it the rows' holder
+      Sessions.liveMemoSessionCount
+      tries += 1
+    }
+    assert(sessionRef.get == null,
+      "a session that served hot-tier hits must be collectable once dropped")
+    assert(rowsRef.get == null, "its hot rows must be collectable with it")
+    assert(Sessions.liveMemoSessionCount <= before,
+      "a collected session must leave the memo store")
+  }
 }

@@ -268,6 +268,100 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
       Seq((3, "c", 30L, true)))
   }
 
+  /** The directory of the version the entry's CURRENT pointer names. */
+  private def currentVersionDir(dir: String, cfg: String): String = {
+    val entry = java.nio.file.Paths.get(dir, QueryCache.cacheKey(cfg))
+    entry.resolve(
+      new String(Files.readAllBytes(entry.resolve("CURRENT")), "UTF-8").trim).toString
+  }
+
+  /** A frame's rows as sorted strings, for an order-free comparison
+    * in which -0.0 and NaN print as such. */
+  private def rendered(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.collect().map(_.toString).sorted.toSeq
+
+  test("query cache hot tier: a warm hit starts no job; count() scans no file and plans no Exchange") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-hot").toString
+    val cfg = """{"q":"hot-tier"}"""
+    QueryCache.cached(spark, dir, cfg)(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
+    val (hit, hitJobs) = jobsStartedBy(
+      QueryCache.cached(spark, dir, cfg)(sys.error("must not rebuild")))
+    assert(hitJobs === 0, s"a warm hot-tier hit started $hitJobs jobs")
+    val (n, countJobs) = jobsStartedBy(hit.count())
+    assert(n === 3)
+    assert(countJobs === 1, s"count() over a hot hit ran $countJobs jobs")
+    // Dataset.count() plans exactly this aggregate
+    val counted = hit.groupBy().count()
+    assert(counted.collect()(0).getLong(0) === 3)
+    val plan = counted.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan"), plan)
+    assert(!plan.contains("FileScan") && !plan.contains("Exchange"), plan)
+    // a refresh replaces the version in the memo and returns the old
+    // rows' bytes to the JVM total (other sessions only ever release)
+    val held = QueryCache.HotTier.heldBytes
+    assert(held > 0)
+    QueryCache.refresh(spark, dir, cfg)(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
+    assert(QueryCache.HotTier.heldBytes <= held,
+      "a replaced hot version must release its bytes")
+  }
+
+  test("query cache hot tier serves exactly the parquet rows of every column type") {
+    import spark.implicits._
+    import java.sql.{Date, Timestamp}
+    val dir = Files.createTempDirectory("graft-hot-types").toString
+    val cfg = """{"q":"hot-types"}"""
+    val df = Seq(
+      (1, Some(BigDecimal("12345.67")), Some(Date.valueOf("2024-02-29")),
+        Some(Timestamp.valueOf("2024-03-10 02:30:00.123456")),
+        Some(Seq(Some(1), None)), Some(Map("a" -> Some(1.5), "b" -> None)),
+        Some((1L, "y")), Double.NaN, -0.0, None: Option[String]),
+      (2, Some(BigDecimal("-0.01")), Some(Date.valueOf("1582-10-04")),
+        Some(Timestamp.valueOf("1900-01-01 00:00:00")),
+        Some(Seq.empty[Option[Int]]), Some(Map.empty[String, Option[Double]]),
+        Some((0L, null: String)), 0.0, Double.NegativeInfinity, Some("x")),
+      (3, None, None, None, None, None, None, -0.0, Double.NaN, None))
+      .toDF("id", "dec", "d", "ts", "arr", "m", "st", "nan", "negzero", "s")
+    QueryCache.cached(spark, dir, cfg)(df)
+    val served = QueryCache.cached(spark, dir, cfg)(sys.error("must not rebuild"))
+    assert(served.queryExecution.executedPlan.toString.contains("LocalTableScan"),
+      "the version must be served from memory")
+    val direct = spark.read.parquet(currentVersionDir(dir, cfg))
+    assert(served.schema === direct.schema)
+    assert(rendered(served) === rendered(direct))
+    assert(rendered(served).exists(_.contains("-0.0")) && rendered(served).exists(_.contains("NaN")))
+    // an empty result keeps its schema (partition 0 always writes a file)
+    QueryCache.cached(spark, dir, cfg + "-empty")(df.filter(lit(false)))
+    val empty = QueryCache.cached(spark, dir, cfg + "-empty")(sys.error("must not rebuild"))
+    assert(empty.schema === spark.read.parquet(currentVersionDir(dir, cfg + "-empty")).schema)
+    assert(empty.collect().isEmpty)
+  }
+
+  test("query cache serves a version over the hot-tier budget from parquet, same rows") {
+    import spark.implicits._
+    val dir = Files.createTempDirectory("graft-cold").toString
+    val cfg = """{"q":"over-budget"}"""
+    val saved = QueryCache.HotTier.versionBudget
+    QueryCache.HotTier.versionBudget = 0L
+    try {
+      QueryCache.cached(spark, dir, cfg)(
+        Seq((1L, "a", 0.5), (2L, "b", -0.0), (3L, null, Double.NaN)).toDF("id", "v", "x"))
+      // schema from the footer, no collect: the hit starts no job
+      val (hit, hitJobs) = jobsStartedBy(
+        QueryCache.cached(spark, dir, cfg)(sys.error("must not rebuild")))
+      assert(hitJobs === 0, s"an over-budget hit started $hitJobs jobs")
+      assert(hit.queryExecution.executedPlan.toString.contains("FileScan parquet"),
+        "an over-budget version must be served from parquet")
+      val direct = spark.read.parquet(currentVersionDir(dir, cfg))
+      assert(hit.schema === direct.schema)
+      assert(rendered(hit) === rendered(direct))
+      val (fresh, freshJobs) = jobsStartedBy(
+        QueryCache.cached(spark.newSession(), dir, cfg)(sys.error("must not rebuild")))
+      assert(freshJobs === 0, s"a fresh session's first over-budget hit started $freshJobs jobs")
+      assert(rendered(fresh) === rendered(direct))
+    } finally QueryCache.HotTier.versionBudget = saved
+  }
+
   test("cache key is deterministic and config-sensitive") {
     assert(QueryCache.cacheKey("abc") === QueryCache.cacheKey("abc"))
     assert(QueryCache.cacheKey("abc") !== QueryCache.cacheKey("abd"))
