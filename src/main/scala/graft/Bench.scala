@@ -13,6 +13,14 @@ import org.apache.spark.sql.functions.{col, expr, map_entries, xxhash64}
   * that throws is reported with "failed":[names] and a non-zero exit —
   * never silently counted as a healthy time.
   *
+  * One sequential timing loop: queries run one at a time, so each
+  * query's walls are its own, and each is followed by its untimed
+  * per-query instruments (the half-cap probe rerun, the calibration
+  * probe, the boundary GC), which then never land inside another
+  * query's timed window. `loop_wall_sec` is the wall of that whole
+  * loop. For an A/B on a subset, SPARK_GRAFT_BENCH_ONLY names the
+  * queries.
+  *
   * TWO timed actions per query, side by side in bench.json:
   *  - `median` (with min/max rep spread): count() — the action every
   *    prior round recorded, kept for cross-round comparability.
@@ -58,10 +66,10 @@ object Bench {
   private val probeCounters: Map[String, (SparkSession, String) => Long] = {
     val docProbes = (s: SparkSession, dir: String) =>
       graft.sources.Tables.documents(s, dir)
-        .filter(Probes.isProbe(col("doc_id"))).count()
+        .filter(Probes.isProbe(s, col("doc_id"))).count()
     val vecProbes = (s: SparkSession, dir: String) =>
       graft.sources.Tables.embeddings(s, dir)
-        .filter(Probes.isProbe(col("vec_id"))).count()
+        .filter(Probes.isProbe(s, col("vec_id"))).count()
     Map(
       "q17_cosine_topk" -> docProbes, "q18_weighted_recs" -> docProbes,
       "q24_ann_bruteforce" -> vecProbes, "q25_ann_lsh" -> vecProbes,
@@ -222,41 +230,17 @@ object Bench {
     case class R(name: String, median: Double, min: Double, max: Double,
       fullMedian: Double, ok: Boolean, calibMs: Double, calibExtra: Int,
       firstTouch: Double, halfCapSec: Double, halfCapProbes: Long)
-    // CONCURRENT-SUBMISSION EXPERIMENT (r14, VERDICT item 6; guide
-    // §2.6 "overlap independent jobs"): at sf0.1 the 99-query loop is
-    // dominated by per-query fixed overhead — each query's last
-    // stragglers leave 31 of 32 cores idle until the next query
-    // starts. SPARK_GRAFT_BENCH_CONCURRENCY=N (DEFAULT 1 = the exact
-    // sequential path below, unchanged — committed records and the
-    // driver's runs stay comparable) submits N queries' timing loops
-    // from a small thread pool so the next query's tasks back-fill the
-    // tail. Under N>1 the per-query walls measure CO-SCHEDULED time
-    // (meaningless as kernel medians — never commit such a record);
-    // the readout is loop_wall_sec, recorded on both paths. The
-    // concurrent path therefore also SKIPS the three sequential-only
-    // per-query instruments, each unsound under co-running: the
-    // half-cap probe rerun (it mutates the GLOBAL probe-cap property a
-    // co-running retrieval query would read), the calibration probe
-    // (co-running queries ARE load — it would read as a stall), and
-    // the boundary System.gc() (a STW pause inside a co-runner's
-    // timed rep).
-    val concurrency =
-      math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_CONCURRENCY", "1").toInt)
-    // One query's timed body, shared by both paths: the optional warm
-    // pass (recorded as first_touch), `reps` count passes and
-    // `fullReps` full-width passes. Either rep count may be 0
-    // (count-only or full-only A/B modes): an empty vector reports
-    // 0.0, never an index crash (an r9 run hit IndexOutOfBounds with
-    // FULL_REPS=0), and min/max mirror that. The sequential-only
-    // instruments are left at their "not taken" values (-1 / 0) for
-    // the caller to fill in.
-    def timeQuery(name: String, fn: (SparkSession, String) => DataFrame): R = {
+    val loopT0 = System.nanoTime()
+    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val firstTouch: Double =
         if (warm && !warmSkip(name)) {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() } catch { case _: Throwable => }
           (System.nanoTime() - t0) / 1e9
         } else -1.0
+      // Either rep count may be 0 (count-only or full-only A/B modes):
+      // an empty vector reports 0.0, never an index crash (an r9 run
+      // hit IndexOutOfBounds with FULL_REPS=0), and min/max mirror that.
       def timed(n: Int, label: String)(consume: DataFrame => Unit): Seq[(Double, Boolean)] =
         (1 to n).map { _ =>
           val t0 = System.nanoTime()
@@ -271,30 +255,6 @@ object Bench {
       val sorted = runs.map(_._1).sorted
       val fullSorted = fullRuns.map(_._1).sorted
       def med(v: Seq[Double]): Double = if (v.isEmpty) 0.0 else v(v.length / 2)
-      R(name, med(sorted), sorted.headOption.getOrElse(0.0),
-        sorted.lastOption.getOrElse(0.0), med(fullSorted),
-        runs.forall(_._2) && fullRuns.forall(_._2),
-        -1.0, 0, firstTouch, -1.0, -1L)
-    }
-    def runConcurrent(): Seq[R] = {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(concurrency)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      val futures = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-        scala.concurrent.Future {
-          spark.sparkContext.setJobDescription(s"bench: $name")
-          timeQuery(name, fn)
-        }
-      }
-      val rs = futures.map(f =>
-        scala.concurrent.Await.result(f, scala.concurrent.duration.Duration.Inf))
-      pool.shutdown()
-      rs
-    }
-    val loopT0 = System.nanoTime()
-    val results = if (concurrency > 1) runConcurrent()
-    else selected.toSeq.sortBy(_._1).map { case (name, fn) =>
-      val timing = timeQuery(name, fn)
       // Marginal per-probe cost under a cap (untimed extra run): a cap
       // amortizes any probe-count-INDEPENDENT cost (q45's in-query IVF
       // retrain, artifact opens) over fewer probes, so raw
@@ -310,21 +270,20 @@ object Bench {
       // reps >= 1: in full-only A/B mode (REPS=0) there is no real
       // full-cap wall for the two-point fit to use, so the extra
       // half-cap run would only waste untimed wall (ADVICE r11)
+      val cap = Probes.cap(spark)
       val (halfCapSec, halfCapProbes): (Double, Long) =
-        if (reps >= 1 && Probes.cap > 1 && probeCounts.get(name).exists(_ > 0)) {
-          val oldProp = sys.props.get("spark.graft.probeCap")
-          sys.props.update("spark.graft.probeCap", (Probes.cap / 2).toString)
+        if (reps >= 1 && cap > 1 && probeCounts.get(name).exists(_ > 0)) {
+          val oldCap = spark.conf.getOption(Probes.CapKey)
+          spark.conf.set(Probes.CapKey, cap / 2)
           try {
             val p = try probeCounters(name)(spark, sfDir)
                     catch { case _: Throwable => -1L }
             val t0 = System.nanoTime()
             try { fn(spark, sfDir).count() } catch { case _: Throwable => }
             ((System.nanoTime() - t0) / 1e9, p)
-          } finally {
-            oldProp match {
-              case Some(v) => sys.props.update("spark.graft.probeCap", v)
-              case None    => sys.props.remove("spark.graft.probeCap")
-            }
+          } finally oldCap match {
+            case Some(v) => spark.conf.set(Probes.CapKey, v)
+            case None    => spark.conf.unset(Probes.CapKey)
           }
         } else (-1.0, -1L)
       // one calibration sample taken right after this query's reps:
@@ -366,27 +325,28 @@ object Bench {
       // timer interval, keeping the 1-2 s Full-GC pause out of timed
       // reps and out of the calibration samples above
       System.gc()
-      timing.copy(calibMs = calibSample, calibExtra = calibExtra,
-        halfCapSec = halfCapSec, halfCapProbes = halfCapProbes)
+      R(name, med(sorted), sorted.headOption.getOrElse(0.0),
+        sorted.lastOption.getOrElse(0.0), med(fullSorted),
+        runs.forall(_._2) && fullRuns.forall(_._2),
+        calibSample, calibExtra, firstTouch, halfCapSec, halfCapProbes)
     }
-    // wall of the whole timing loop: the number the concurrency
-    // experiment moves (sum-of-medians can't see tail back-fill)
+    // wall of the whole timing loop, reps plus the per-query
+    // instruments (sum-of-medians can't see the time between reps)
     val loopWallSec = (System.nanoTime() - loopT0) / 1e9
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    // stdout gets ONLY the fixed-size summary object (~170 B): the
-    // per-query map grew past the driver's ~2.26 KB stdout tail buffer
-    // at 99 queries (rounds 5 AND 6 arrived truncated, parsed:null) and
-    // will only keep growing. The full per-query detail — median plus
-    // the min/max rep spread, full_median, and the probe divisors —
-    // lives exclusively in bench.json.
-    val failed = results.filterNot(_.ok).map("\"" + _.name + "\"").mkString("[", ",", "]")
-    val skipped = skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")
+    import Json.{arr, num, obj, str}
+    // stdout gets ONLY the fixed-size summary object: the per-query map
+    // grew past the driver's ~2.26 KB stdout tail buffer at 99 queries
+    // (rounds 5 AND 6 arrived truncated, parsed:null) and will only
+    // keep growing. The full per-query detail — median plus the
+    // min/max rep spread, full_median, and the probe divisors — lives
+    // exclusively in bench.json.
+    val failed = arr(results.filterNot(_.ok).map(r => str(r.name)))
+    val skipped = arr(skip.toSeq.sorted.map(str))
     val total = results.map(_.median).sum
     val fullTotal = results.map(_.fullMedian).sum
     val ctField =
-      if (centroidTrainSec >= 0)
-        s""","centroid_train_sec":${fmt(centroidTrainSec)}"""
-      else ""
+      if (centroidTrainSec >= 0) Seq("centroid_train_sec" -> num(centroidTrainSec))
+      else Nil
     // r14 ADDITIONS-ONLY stdout fields (VERDICT r13 items 3 + 8): the
     // driver's PERF comparison reads only this line, so it was blind to
     // per-query deltas and to the VM-noise certificate. Both now ride
@@ -406,50 +366,54 @@ object Bench {
     val calibWorst = if (results.isEmpty) 0.0 else results.map(_.calibMs).max
     val stallWindows =
       results.count(_.calibMs > LoadSentinel.escalationThresholdMs)
-    val qMedians = results.map(r =>
-      "\"" + r.name.take(3) + "\":" + fmt(r.median)).mkString("{", ",", "}")
-    val concField =
-      if (concurrency > 1) s""","concurrency":$concurrency""" else ""
-    val summary =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","failed":$failed,"reps":$reps,"sf":"$sfDir","n_queries":${results.length},"build_sec":${fmt(buildSec)}$ctField,"skipped":$skipped,"full_total":${fmt(fullTotal)},"queries":$qMedians,"calib_ms_worst":${fmt(calibWorst)},"stall_windows":$stallWindows,"loop_wall_sec":${fmt(loopWallSec)}$concField}"""
+    val qMedians = obj(results.map(r => r.name.take(3) -> num(r.median)))
+    val metricFields = Seq("metric" -> str("total"), "value" -> num(total), "unit" -> str("sec"))
+    val runFields = Seq("failed" -> failed, "reps" -> reps.toString,
+      "sf" -> str(sfDir), "n_queries" -> results.length.toString,
+      "build_sec" -> num(buildSec)) ++ ctField ++
+      Seq("skipped" -> skipped, "full_total" -> num(fullTotal))
+    val summary = obj(metricFields ++ runFields ++ Seq("queries" -> qMedians,
+      "calib_ms_worst" -> num(calibWorst), "stall_windows" -> stallWindows.toString,
+      "loop_wall_sec" -> num(loopWallSec)))
     println(summary)
     // raw copy on stderr too: sbt prefixes stdout with "[info] ", which
     // breaks line-oriented parsers; stderr passes through un-prefixed
     System.err.println(summary)
-    val qs = results.map { r =>
+    val qs = obj(results.map { r =>
       val probeFields = probeCounts.get(r.name) match {
         case Some(p) if p > 0 =>
-          val base = s""","probes":$p,"ms_per_probe":${fmt(r.median * 1000.0 / p)}"""
           // two (probes, wall) points on the same fixed cost: slope =
           // marginal ms/probe, intercept = the probe-independent share
           val marginal = marginalFit(r.median, r.halfCapSec, p, r.halfCapProbes)
-            .map { case (slope, fixed) =>
-              s""","half_cap_sec":${fmt(r.halfCapSec)},"half_cap_probes":${r.halfCapProbes},"ms_per_probe_marginal":${fmt(slope)},"fixed_sec_est":${fmt(fixed)}"""
-            }.getOrElse("")
-          base + marginal
-        case _ => ""
+            .toSeq.flatMap { case (slope, fixed) =>
+              Seq("half_cap_sec" -> num(r.halfCapSec),
+                "half_cap_probes" -> r.halfCapProbes.toString,
+                "ms_per_probe_marginal" -> num(slope), "fixed_sec_est" -> num(fixed))
+            }
+          Seq("probes" -> p.toString, "ms_per_probe" -> num(r.median * 1000.0 / p)) ++
+            marginal
+        case _ => Nil
       }
       val ftField =
-        if (r.firstTouch >= 0) s""","first_touch":${fmt(r.firstTouch)}""" else ""
+        if (r.firstTouch >= 0) Seq("first_touch" -> num(r.firstTouch)) else Nil
       // calib_extra > 0 marks an entry whose probe escalated past the
       // min-of-3 window (self-IO tail settling), so a tail-masked
       // reading is identifiable in the record instead of folklore
       val ceField =
-        if (r.calibExtra > 0) s""","calib_extra":${r.calibExtra}""" else ""
+        if (r.calibExtra > 0) Seq("calib_extra" -> r.calibExtra.toString) else Nil
       // build_shared names the one-off cost this entry's build_sec
       // deliberately EXCLUDES (timed once, record-level, as
       // centroid_train_sec) so the split is readable from the entry
-      val buildField = buildSecs.get(r.name)
-        .map(b => s""","build_sec":${fmt(b)}""" + (
+      val buildField = buildSecs.get(r.name).toSeq.flatMap(b =>
+        ("build_sec" -> num(b)) +: (
           if (sharesCentroidTrain(r.name) && centroidTrainSec >= 0)
-            s""","build_shared":"centroid_train""""
-          else "")).getOrElse("")
-      "\"" + r.name + "\":{\"median\":" + fmt(r.median) +
-        ",\"min\":" + fmt(r.min) + ",\"max\":" + fmt(r.max) +
-        ",\"full_median\":" + fmt(r.fullMedian) +
-        ",\"calib_ms\":" + fmt(r.calibMs) + ceField + buildField +
-        probeFields + ftField + "}"
-    }.mkString("{", ",", "}")
+            Seq("build_shared" -> str("centroid_train"))
+          else Nil))
+      r.name -> obj(Seq("median" -> num(r.median), "min" -> num(r.min),
+        "max" -> num(r.max), "full_median" -> num(r.fullMedian),
+        "calib_ms" -> num(r.calibMs)) ++ ceField ++ buildField ++
+        probeFields ++ ftField)
+    })
     val loadAfter = loadAvg
     val calibAfter = calib3
     // calibWorst (computed above, now also on stdout): the run's worst
@@ -458,14 +422,21 @@ object Bench {
     // per-query sample is a min-of-3 spaced 250 ms, still noisier than
     // the bracket medians — check_records.py holds it to the calibrated
     // 2.5x threshold vs the brackets' 1.5x)
-    def fmtSeq(v: Seq[Double]): String =
-      v.map(fmt).mkString("[", ",", "]")
     // probe-cap policy: when set (large-sf benches only — see Probes),
     // the record says so, next to the counted per-query divisors
-    val probeCapField =
-      if (Probes.cap > 0) s""","probe_cap":${Probes.cap}""" else ""
-    val full =
-      s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"failed":$failed,"reps":$reps,"sf":"$sfDir","n_queries":${results.length},"build_sec":${fmt(buildSec)}$ctField,"skipped":$skipped,"full_total":${fmt(fullTotal)},"full_reps":$fullReps$probeCapField,"disk_free_gb_before":$diskFreeBefore,"disk_free_gb_after":$diskFreeGb,"loadavg_before":${fmtSeq(loadBefore)},"loadavg_after":${fmtSeq(loadAfter)},"calib_ms_before":${fmt(calibBefore)},"calib_ms_start":${fmt(calibStart)},"calib_ms_after":${fmt(calibAfter)},"calib_ms_worst":${fmt(calibWorst)},"stall_windows":$stallWindows,"loop_wall_sec":${fmt(loopWallSec)}$concField,"warm_pass":$warm,"warm_skipped":${(if (warm) warmSkip.intersect(selected.keySet) else Set.empty[String]).toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]")}}"""
+    val probeCap = Probes.cap(spark)
+    val probeCapField = if (probeCap > 0) Seq("probe_cap" -> probeCap.toString) else Nil
+    val warmSkipped = if (warm) warmSkip.intersect(selected.keySet) else Set.empty[String]
+    val full = obj(metricFields ++ Seq("queries" -> qs) ++ runFields ++
+      Seq("full_reps" -> fullReps.toString) ++ probeCapField ++ Seq(
+        "disk_free_gb_before" -> diskFreeBefore.toString,
+        "disk_free_gb_after" -> diskFreeGb.toString,
+        "loadavg_before" -> arr(loadBefore.map(num)), "loadavg_after" -> arr(loadAfter.map(num)),
+        "calib_ms_before" -> num(calibBefore), "calib_ms_start" -> num(calibStart),
+        "calib_ms_after" -> num(calibAfter), "calib_ms_worst" -> num(calibWorst),
+        "stall_windows" -> stallWindows.toString, "loop_wall_sec" -> num(loopWallSec),
+        "warm_pass" -> warm.toString,
+        "warm_skipped" -> arr(warmSkipped.toSeq.sorted.map(str))))
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (full + "\n").getBytes("UTF-8"))
     spark.stop()

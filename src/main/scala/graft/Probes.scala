@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, SparkSession}
 
 /** The benchmark probe-set convention, in one place.
   *
@@ -12,14 +12,15 @@ import org.apache.spark.sql.Column
   * put a 10x factor on the wall numbers even where per-probe latency
   * is flat (q45 2.36 ms/probe at sf100 vs 1.57 at sf10).
   *
-  * `spark.graft.probeCap` (system property; SPARK_GRAFT_PROBE_CAP env
+  * `spark.graft.probeCap` (session conf; SPARK_GRAFT_PROBE_CAP env
   * fallback) caps the set at its first N members by id — a
   * deterministic PREFIX of the standard set (ids are dense from 0 in
   * the test corpora, so `id < cap*50` keeps exactly `cap` members; on
   * a sparse layout it still selects a deterministic prefix and the
   * bench records the true counted cardinality). Capped results are a
   * probe-subset of uncapped ones, never a different workload per
-  * probe.
+  * probe. The cap is read from the session that builds the query, so
+  * two sessions of one JVM can run under different caps at once.
   *
   * Intended ONLY for large-scale-factor benchmark runs: the sf100
   * gate pins the cap to sf10's 4 000-probe cardinality so q45/q88
@@ -28,17 +29,20 @@ import org.apache.spark.sql.Column
   * on the full uncapped contract. Bench records `probe_cap` plus the
   * counted per-query `probes` divisor next to `ms_per_probe`. */
 object Probes {
-  /** Active cap (0 = uncapped). Read per call — fixed per JVM in real
-    * runs; mutable via sys.props so specs can exercise both regimes. */
-  def cap: Long =
-    sys.props.get("spark.graft.probeCap")
+  /** Session conf key of the cap. */
+  val CapKey = "spark.graft.probeCap"
+
+  /** `spark`'s active cap (0 = uncapped). Read per call, so a
+    * query picks up the cap its session holds when it is built. */
+  def cap(spark: SparkSession): Long =
+    spark.conf.getOption(CapKey)
       .orElse(sys.env.get("SPARK_GRAFT_PROBE_CAP"))
       .map(_.trim.toLong).filter(_ > 0).getOrElse(0L)
 
   /** Standard probe membership for `id`: every 50th id, intersected
-    * with the cap prefix when a cap is set. */
-  def isProbe(id: Column): Column = {
-    val c = cap
+    * with the prefix `spark`'s cap keeps when one is set. */
+  def isProbe(spark: SparkSession, id: Column): Column = {
+    val c = cap(spark)
     val base = id % 50 === 0
     if (c > 0) base && id < c * 50 else base
   }

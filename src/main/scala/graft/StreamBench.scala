@@ -49,9 +49,6 @@ import graft.streaming.{StreamDedup, StreamSessionize}
   * $SPARK_GRAFT_STREAMBENCH_OUT), the Bench.scala convention. */
 object StreamBench {
 
-  private def fmt(v: Double): String =
-    "%.3f".formatLocal(java.util.Locale.ROOT, v)
-
   /** Recursive directory size in bytes (0 when absent). */
   private def dirBytes(path: java.io.File): Long =
     if (!path.exists()) 0L
@@ -237,21 +234,24 @@ object StreamBench {
       run("windowed_counts", evRows)(
         df => StreamSessionize.windowedCounts(df), evIn)).flatten
 
-    val js = results.map { r =>
+    import Json.{arr, num, obj, str}
+    val js = obj(results.map { r =>
       val sortedWalls = r.walls.sorted
       val median = sortedWalls(sortedWalls.length / 2)
-      s""""${r.name}":{"rows":${r.rows},"wall_sec":${fmt(median)},""" +
-        s""""wall_secs":${r.walls.map(fmt).mkString("[", ",", "]")},""" +
-        s""""rows_per_sec":${fmt(r.rows / median)},""" +
-        s""""marks_stable":${r.marksStable},""" +
-        s""""state_rows":${r.stateRows},"state_bytes":${r.stateBytes},""" +
-        s""""state_files_bytes":${r.stateFilesBytes}}"""
-    }.mkString("{", ",", "}")
+      r.name -> obj(Seq("rows" -> r.rows.toString, "wall_sec" -> num(median),
+        "wall_secs" -> arr(r.walls.map(num)), "rows_per_sec" -> num(r.rows / median),
+        "marks_stable" -> r.marksStable.toString,
+        "state_rows" -> r.stateRows.toString, "state_bytes" -> r.stateBytes.toString,
+        "state_files_bytes" -> r.stateFilesBytes.toString))
+    })
     val loadAfter = LoadSentinel.loadAvg
     val calibAfter = LoadSentinel.calib3
-    def fmtSeq(v: Seq[Double]): String = v.map(fmt).mkString("[", ",", "]")
-    val line =
-      s"""{"metric":"stream_rows_per_sec","sf":"$sfDir","files_per_trigger":$filesPerTrigger,"n_slices":$nSlices,"n_slices_events":$nSlicesEvents,"state_store":"$stateStore","retain_batches":$retain,"takes":$takes,"ops":$js,"loadavg_before":${fmtSeq(loadBefore)},"loadavg_after":${fmtSeq(loadAfter)},"calib_ms_before":${fmt(calibBefore)},"calib_ms_after":${fmt(calibAfter)}}"""
+    val line = obj(Seq("metric" -> str("stream_rows_per_sec"), "sf" -> str(sfDir),
+      "files_per_trigger" -> filesPerTrigger.toString, "n_slices" -> nSlices.toString,
+      "n_slices_events" -> nSlicesEvents.toString, "state_store" -> str(stateStore),
+      "retain_batches" -> retain.toString, "takes" -> takes.toString, "ops" -> js,
+      "loadavg_before" -> arr(loadBefore.map(num)), "loadavg_after" -> arr(loadAfter.map(num)),
+      "calib_ms_before" -> num(calibBefore), "calib_ms_after" -> num(calibAfter)))
     println(line)
     System.err.println(line)
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),

@@ -39,7 +39,7 @@ object Verify {
       System.err.println(s"[verify] SKIPPING (documented scale-step " +
         s"exclusions): ${skip.toSeq.sorted.mkString(",")}")
     Files.writeString(Paths.get(s"$outDir/skipped.json"),
-      skip.toSeq.sorted.map("\"" + _ + "\"").mkString("[", ",", "]"))
+      Json.arr(skip.toSeq.sorted.map(Json.str)))
     val resume = sys.env.get("SPARK_GRAFT_VERIFY_RESUME").contains("1")
     SparkEntry.queries.foreach { case (name, fn) =>
       val done = resume && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))
@@ -63,20 +63,7 @@ object Verify {
       } else if (done)
         System.err.println(s"[verify] $name: resume skip (_SUCCESS present)")
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
-    val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+    val json = Json.obj(SparkEntry.oracleSql.toSeq.map { case (k, v) => k -> Json.str(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
   }

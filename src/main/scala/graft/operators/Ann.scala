@@ -44,7 +44,7 @@ object Ann {
     * is judged against. */
   def q24AnnBruteforce(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.parallelized(Tables.embeddings(spark, dir), col("vec_id"))
-    val probes = emb.filter(graft.Probes.isProbe(col("vec_id")))
+    val probes = emb.filter(graft.Probes.isProbe(spark, col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"))
     val scored = emb.select(col("vec_id").as("neighbor_id"), col("embedding"))
       .join(broadcast(probes), col("probe_id") =!= col("neighbor_id"))
@@ -95,7 +95,7 @@ object Ann {
     // 8 GB broadcast ceiling but a further 10× step is not: large-sf
     // runs pin graft.Probes.cap (the sf100 gate uses 4000), which
     // bounds this broadcast to cap × nTables rows regardless of scale.
-    val probes = emb.filter(graft.Probes.isProbe(col("vec_id")))
+    val probes = emb.filter(graft.Probes.isProbe(spark, col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("tbl"), col("bucket"))
     val topk = udaf(new graft.functions.TopKDistinctAgg[(Double, Long)](5,
@@ -169,7 +169,7 @@ object Ann {
       col("vec_id").as("neighbor_id"), col("embedding"),
       exprCol(NearestCellsInt(expression(col("q")), cents, 1))(0).as("cell"))
     // probe side: fan out to the probeCells nearest cells
-    val probes = emb.filter(graft.Probes.isProbe(col("vec_id")))
+    val probes = emb.filter(graft.Probes.isProbe(spark, col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         explode(exprCol(NearestCellsInt(expression(col("q")), cents, probeCells)))
           .as("cell"))
@@ -291,7 +291,7 @@ object Ann {
     val corpus = vecs
       .select(col("vec_id").as("neighbor_id"),
         exprColQ(graft.functions.PqCodesInt(exprQ(col("q")), cents)).as("codes"))
-    val probes = vecs.filter(graft.Probes.isProbe(col("vec_id")))
+    val probes = vecs.filter(graft.Probes.isProbe(spark, col("vec_id")))
       .select(col("vec_id").as("probe_id"),
         exprColQ(graft.functions.PqDistTableInt(exprQ(col("q")), cents)).as("dtab"))
     val adc = (0 until m).map(s =>
@@ -305,7 +305,7 @@ object Ann {
       .filter(col("adc_rank") <= shortlist)
       .select(col("probe_id"), col("neighbor_id"), col("adc_dist"))
     // exact rerank: only shortlist rows fetch full vectors
-    val pq = vecs.filter(graft.Probes.isProbe(col("vec_id")))
+    val pq = vecs.filter(graft.Probes.isProbe(spark, col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("q").as("pq"))
     val nq = vecs.select(col("vec_id").as("neighbor_id"), col("q").as("nq"))
     val wExact = Window.partitionBy(col("probe_id"))

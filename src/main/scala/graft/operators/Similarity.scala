@@ -83,7 +83,7 @@ object Similarity {
     // hide a cache inside one query.
     val post = postings(spark, dir)
     val n = norms(post)
-    val probes = post.filter(graft.Probes.isProbe(col("doc_id")))
+    val probes = post.filter(graft.Probes.isProbe(spark, col("doc_id")))
       .select(col("doc_id").as("probe_doc"), col("word"), col("cnt").as("p_cnt"))
     val dots = probes
       .join(post.withColumnRenamed("doc_id", "neighbor_doc"), "word")
@@ -157,20 +157,21 @@ object Similarity {
     * same granularity the q88 index build already established; stored
     * in the WEAK per-session store (Sessions.sessionMemo, r13) so a
     * dropped session's probes are collectable with it. */
-  private[graft] def gateKey(dir: String, maxVocab: Int): Any =
-    ("q17gate", dir, maxVocab, graft.Probes.cap)
+  private[graft] def gateKey(spark: SparkSession, dir: String, maxVocab: Int): Any =
+    ("q17gate", dir, maxVocab, graft.Probes.cap(spark))
 
-  // The probe cap joins the key: fixed per JVM in real runs, but specs
-  // toggle it via sys.props and must not inherit a stale probe count.
+  // The probe cap joins the key: the session's cap can change within
+  // the session (Bench's half-cap rerun, specs), and a probe count
+  // taken under another cap is stale.
   private def gateProbe(spark: SparkSession, dir: String,
       maxVocab: Int): GateProbe =
-    graft.Sessions.sessionMemo(spark, gateKey(dir, maxVocab)) {
+    graft.Sessions.sessionMemo(spark, gateKey(spark, dir, maxVocab)) {
       val vocab = discoverVocab(spark, dir, maxVocab)
       if (vocab.length > maxVocab) GateProbe(vocab, None)
       else {
         val counts = Tables.documents(spark, dir).agg(
           count(lit(1)).as("n"),
-          sum(when(graft.Probes.isProbe(col("doc_id")), 1L).otherwise(0L)).as("probes"))
+          sum(when(graft.Probes.isProbe(spark, col("doc_id")), 1L).otherwise(0L)).as("probes"))
           .head()
         GateProbe(vocab, Some((counts.getLong(0), counts.getLong(1))))
       }
@@ -243,7 +244,7 @@ object Similarity {
     // per-pair op order) and the exploded pair stream carries only
     // (idx, cosine). Probe residency on the driver is the same
     // broadcast-sized contract the old path already required.
-    val probeRows = vecs.filter(graft.Probes.isProbe(col("doc_id")))
+    val probeRows = vecs.filter(graft.Probes.isProbe(spark, col("doc_id")))
       .select(col("doc_id"), col("vec")).collect().sortBy(_.getLong(0))
     val probeIds = probeRows.map(_.getLong(0))
     val probeMat = probeRows.map(_.getSeq[Float](1).toArray)

@@ -197,7 +197,7 @@ object IvfIndex {
   def q88IvfpqProbe(spark: SparkSession, dir: String): DataFrame = {
     val path = ensureQ88Built(spark, dir)
     val probes = Tables.embeddings(spark, dir)
-      .filter(graft.Probes.isProbe(col("vec_id"))).select("vec_id", "embedding")
+      .filter(graft.Probes.isProbe(spark, col("vec_id"))).select("vec_id", "embedding")
     probePq(spark, path, probes, nProbeCells = 6,
       shortlist = serveShortlist(6), topK = 10)
   }

@@ -30,22 +30,15 @@ import java.security.MessageDigest
   * versions are garbage-collected after a grace period so in-flight
   * readers of the old version finish unharmed.
   *
-  * OBJECT-STORE COMMIT (rename-free): S3-style stores have no atomic
-  * rename, so every publish ALSO drops a `.current-v-…` MARKER file
-  * (one single-object PUT — atomic on S3) beside the version dir, and
-  * readers that find no usable CURRENT pointer resolve the live
-  * version as "newest marker whose version dir is complete
-  * (_SUCCESS)". With `-Dgraft.cache.renameFree=true` the pointer swap
-  * is skipped entirely and markers are the ONLY commit record — the
-  * protocol then needs no rename anywhere: version data is written
-  * directly under its final name (completeness gated by _SUCCESS, the
-  * cloud committer's own completion marker), and commit = one marker
-  * PUT. Listing-after-put is strongly consistent on current S3;
-  * InfraSpec simulates the rename-free path by resolving without any
-  * CURRENT file.
+  * The protocol's one requirement of the file system is an atomic
+  * same-directory rename (POSIX `rename(2)`, `Files.move` with
+  * ATOMIC_MOVE): the pointer swap is the commit. A writer that dies
+  * before it (version dir without `_SUCCESS`, or complete but never
+  * named by CURRENT) leaves the previous version live; GC reclaims
+  * its leftovers after the grace period.
   *
-  * READ COST: every read re-runs the version resolution (CURRENT or
-  * marker lookup, the _SUCCESS and TTL checks). The session memo then
+  * READ COST: every read re-runs the version resolution (the CURRENT
+  * lookup, the _SUCCESS and TTL checks). The session memo then
   * keeps, per entry, the last version opened: its name, its schema and,
   * when it is small, its rows (the hot tier).
   *  - A hit on a hot version opens no file and starts no job before the
@@ -195,46 +188,18 @@ object QueryCache {
     }
   }
 
-  /** True when publishes must not rely on rename at all (object-store
-    * mode): commit = marker PUT only, resolution = newest marker. */
-  private def renameFree: Boolean =
-    sys.props.get("graft.cache.renameFree").contains("true")
-
-  /** The live, complete version dir for an entry, if any: the CURRENT
-    * pointer when it is usable, else the newest `.current-v-…` marker
-    * whose version completed — the rename-free resolution path. */
-  private def currentVersion(entry: Path): Option[Path] =
-    pointerVersion(entry).orElse(markerVersion(entry))
-
-  private def pointerVersion(entry: Path): Option[Path] = {
+  /** The live, complete version dir the CURRENT pointer names, if
+    * any. A version is only live if its write completed (_SUCCESS); a
+    * pointer to a damaged or missing dir reads as a miss, not an error. */
+  private def currentVersion(entry: Path): Option[Path] = {
     val ptr = entry.resolve("CURRENT")
-    if (renameFree || !Files.exists(ptr)) None
+    if (!Files.exists(ptr)) None
     else {
       val name = new String(Files.readAllBytes(ptr), "UTF-8").trim
       val v = entry.resolve(name)
-      // a version is only live if its write completed (_SUCCESS); a
-      // pointer to a damaged/missing dir reads as a miss, not an error
       if (name.startsWith("v-") && Files.exists(v.resolve("_SUCCESS"))) Some(v)
       else None
     }
-  }
-
-  /** Newest complete version by commit marker: markers are named
-    * `.current-v-<millis>-<nonce>`, so (millis, nonce) orders commits;
-    * markers pointing at incomplete/vanished versions are skipped (a
-    * writer that died between data PUT and marker PUT left no marker;
-    * one that died before _SUCCESS left an unusable marker — both read
-    * as "previous version still live"). */
-  private def markerVersion(entry: Path): Option[Path] = {
-    if (!Files.isDirectory(entry)) return None
-    children(entry).map(_.getFileName.toString)
-      .filter(_.startsWith(".current-v-"))
-      .map(_.stripPrefix(".current-"))
-      .sortBy(n => (versionMillis(entry.resolve(n)), n))(Ordering.Tuple2(
-        Ordering.Long.reverse, Ordering.String.reverse))
-      .iterator
-      .map(entry.resolve)
-      .find(v => Files.exists(v.resolve("_SUCCESS")))
   }
 
   /** Open a resolved, complete version dir: the one read site of
@@ -350,8 +315,8 @@ object QueryCache {
 
   /** Millis encoded in a v-<millis>-<nonce> name; malformed names
     * (a manual copy, a truncated write) read as infinitely old, so
-    * readers treat them as expired and GC reclaims them — never an
-    * exception out of a cache internals path. */
+    * readers treat them as expired — never an exception out of a cache
+    * internals path. */
   private def versionMillis(v: Path): Long =
     try v.getFileName.toString.split("-")(1).toLong
     catch { case _: RuntimeException => 0L } // epoch: ancient, not overflow-prone
@@ -413,48 +378,37 @@ object QueryCache {
   }
 
   /** Write a new complete version, commit it, GC old. Commit order:
-    * (1) version data written DIRECTLY under its final name — no tmp
-    * rename; liveness is gated by _SUCCESS (written last by the
-    * committer), so a partial write is never resolvable; (2) the
-    * `.current-<vName>` marker — one small-object PUT, the rename-free
-    * commit record; (3) unless renameFree, the CURRENT pointer swap
-    * (atomic same-directory rename, the POSIX fast path — readers
-    * prefer it, markers are their fallback). A crash between any two
-    * steps leaves the previous version live and this one GC-able. */
+    * (1) version data written DIRECTLY under its final name; liveness
+    * is gated by _SUCCESS (written last by the committer), so a partial
+    * write is never resolvable; (2) the CURRENT pointer swap, an atomic
+    * same-directory rename and the one commit record. A crash before
+    * (2) leaves the previous version live and this one GC-able. */
   private def publish(spark: SparkSession, entry: Path, build: => DataFrame): DataFrame = {
     Files.createDirectories(entry)
     val vName = s"v-${System.currentTimeMillis()}-${(System.nanoTime() % 0xFFFFFF).toHexString}"
     build.write.mode("overwrite").parquet(entry.resolve(vName).toString)
-    Files.write(entry.resolve(s".current-$vName"), vName.getBytes("UTF-8"))
-    if (!renameFree) {
-      val ptrTmp = entry.resolve(s".CURRENT-$vName")
-      Files.write(ptrTmp, vName.getBytes("UTF-8"))
-      Files.move(ptrTmp, entry.resolve("CURRENT"),
-        StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    }
+    val ptrTmp = entry.resolve(s".CURRENT-$vName")
+    Files.write(ptrTmp, vName.getBytes("UTF-8"))
+    Files.move(ptrTmp, entry.resolve("CURRENT"),
+      StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
     gc(entry, vName)
     open(spark, entry, entry.resolve(vName))
   }
 
-  /** Delete superseded versions and orphaned tmp dirs past the grace
-    * period. Best-effort: GC failure never fails the query (but only
-    * IO failures are absorbed — anything else is a real bug and
-    * propagates). */
+  /** Delete every child of the entry other than `keep`, CURRENT and
+    * .lease once it was last modified more than the grace period ago:
+    * superseded versions, a crashed writer's version dir or pointer
+    * temp file, and any other leftover. Best-effort: GC failure never
+    * fails the query (but only IO failures are absorbed — anything else
+    * is a real bug and propagates). */
   private def gc(entry: Path, keep: String): Unit =
     try {
       val now = System.currentTimeMillis()
       children(entry).foreach { p =>
         val name = p.getFileName.toString
-        val stale =
-          (name.startsWith("v-") && name != keep &&
-            now - versionMillis(p) > GcGraceMillis) ||
-          // commit markers die with their version (keep's stays)
-          (name.startsWith(".current-v-") && name != s".current-$keep" &&
-            now - versionMillis(entry.resolve(
-              name.stripPrefix(".current-"))) > GcGraceMillis) ||
-          ((name.startsWith(".tmp-") || name.startsWith(".CURRENT-")) &&
+        if (name != keep && name != "CURRENT" && name != ".lease" &&
             now - Files.getLastModifiedTime(p).toMillis > GcGraceMillis)
-        if (stale) deleteRecursively(p)
+          deleteRecursively(p)
       }
     } catch { case _: java.io.IOException | _: java.io.UncheckedIOException => }
 

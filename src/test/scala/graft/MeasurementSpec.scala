@@ -17,6 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   *  - calibration monotonicity: the calibration loop actually reads
   *    higher on a machine under load — the property the whole
   *    load-sentinel scheme rests on.
+  *  - Json: the records' string escaping and number format, so an env
+  *    value or a path with a quote or backslash still parses.
   */
 class MeasurementSpec extends AnyFunSuite {
 
@@ -137,5 +139,32 @@ class MeasurementSpec extends AnyFunSuite {
         s"calibration must flag load (twice under threshold: " +
           s"quiet=$q1/$q2 ms loaded=$l1/$l2 ms)")
     }
+  }
+
+  // ---- Json --------------------------------------------------------
+
+  test("Json escapes quotes, backslashes and control chars; json parsers read back the input") {
+    assert(Json.str("""a"b\c""") === """"a\"b\\c"""")
+    assert(Json.str("t\tn\nr\r\u0001\u001f") === "\"t\\tn\\nr\\r\\u0001\\u001f\"")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val nasty = Seq("", "plain", "/data/sf\"0.1\\", "C:\\x\\\"", "tab\tcr\rnl\n",
+      (0 until 32).map(_.toChar).mkString, "é 中 \u007f")
+    nasty.foreach(v => assert(mapper.readTree(Json.str(v)).asText() === v))
+    // keys escape too, and fields keep the order given
+    val rec = Json.obj(Seq("sf" -> Json.str("x\"y"), "k\"" -> Json.arr(Seq("1", Json.num(0.5)))))
+    assert(rec === """{"sf":"x\"y","k\"":[1,0.500]}""")
+    val tree = mapper.readTree(rec)
+    assert(tree.get("sf").asText() === "x\"y")
+    assert(tree.fieldNames().next() === "sf")
+  }
+
+  test("Json numbers have three decimals and a '.' point under any default locale") {
+    val saved = java.util.Locale.getDefault
+    java.util.Locale.setDefault(java.util.Locale.GERMANY)
+    try {
+      assert(Json.num(1234.5678) === "1234.568")
+      assert(Json.num(-0.0004) === "-0.000")
+      assert(Json.num(0) === "0.000")
+    } finally java.util.Locale.setDefault(saved)
   }
 }

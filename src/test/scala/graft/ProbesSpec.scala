@@ -13,13 +13,17 @@ import graft.operators.Ann
 class ProbesSpec extends AnyFunSuite with SparkFixture {
 
   private def withCap[A](n: Long)(body: => A): A = {
-    sys.props("spark.graft.probeCap") = n.toString
-    try body finally sys.props.remove("spark.graft.probeCap")
+    spark.conf.set(Probes.CapKey, n)
+    try body finally spark.conf.unset(Probes.CapKey)
   }
+
+  private def q45Triples(s: org.apache.spark.sql.SparkSession): Set[(Long, Long, Int)] =
+    Ann.q45AnnIvf(s, sfDir).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
 
   test("uncapped isProbe matches the historical % 50 convention") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val viaHelper = emb.filter(Probes.isProbe(col("vec_id")))
+    val viaHelper = emb.filter(Probes.isProbe(spark, col("vec_id")))
       .select("vec_id").collect().map(_.getLong(0)).sorted
     val viaLiteral = emb.filter(col("vec_id") % 50 === 0)
       .select("vec_id").collect().map(_.getLong(0)).sorted
@@ -29,10 +33,10 @@ class ProbesSpec extends AnyFunSuite with SparkFixture {
 
   test("cap selects exactly the first N probes by id (dense-id corpus)") {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    val all = emb.filter(Probes.isProbe(col("vec_id")))
+    val all = emb.filter(Probes.isProbe(spark, col("vec_id")))
       .select("vec_id").collect().map(_.getLong(0)).sorted
     val capped = withCap(3) {
-      emb.filter(Probes.isProbe(col("vec_id")))
+      emb.filter(Probes.isProbe(spark, col("vec_id")))
         .select("vec_id").collect().map(_.getLong(0)).sorted
     }
     assert(capped.length === math.min(3, all.length))
@@ -40,16 +44,40 @@ class ProbesSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("capped q45 results equal the uncapped results restricted to the capped probes") {
-    val full = Ann.q45AnnIvf(spark, sfDir).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-      .toSet
-    val capped = withCap(2)(Ann.q45AnnIvf(spark, sfDir).collect())
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
+    val full = q45Triples(spark)
+    val capped = withCap(2)(q45Triples(spark))
     val cappedProbes = capped.map(_._1).toSet
     assert(cappedProbes.size <= 2 && cappedProbes.nonEmpty)
     // same (probe, neighbor, rank) triples: the cap changes WHICH
     // probes run, never what any probe retrieves (the IVF index —
     // centroids, cells — is corpus-side and cap-independent)
     assert(capped.toSet === full.filter(t => cappedProbes(t._1)))
+  }
+
+  test("two sessions of one JVM run q45 at once, each under its own cap") {
+    import java.util.concurrent.{Callable, CountDownLatch, Executors, TimeUnit}
+    val full = q45Triples(spark)
+    val probes = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      .filter(col("vec_id") % 50 === 0)
+      .select("vec_id").collect().map(_.getLong(0)).sorted
+    val caps = Seq(2L, 3L)
+    val sessions = caps.map { c =>
+      val s = spark.newSession()
+      s.conf.set(Probes.CapKey, c)
+      s
+    }
+    val start = new CountDownLatch(1)
+    val pool = Executors.newFixedThreadPool(caps.length)
+    val runs = sessions.map(s => pool.submit(new Callable[Set[(Long, Long, Int)]] {
+      override def call(): Set[(Long, Long, Int)] = { start.await(); q45Triples(s) }
+    }))
+    start.countDown()
+    val got = try runs.map(_.get(300, TimeUnit.SECONDS)) finally pool.shutdown()
+    caps.zip(got).foreach { case (c, triples) =>
+      val prefix = probes.take(c.toInt).toSet
+      assert(triples.map(_._1) === prefix, s"cap $c selects the first $c probes")
+      assert(triples === full.filter(t => prefix(t._1)))
+    }
+    assert(Probes.cap(spark) === 0L, "the sessions' caps leave the parent session uncapped")
   }
 }

@@ -61,7 +61,7 @@ class AnnSpec extends AnyFunSuite with SparkFixture {
       .select(col("vec_id"), col("embedding"),
         posexplode(exprCol(graft.functions.HyperplaneBuckets(
           expression(col("embedding")), 8, 8))).as(Seq("tbl", "bucket")))
-    val probes = emb.filter(graft.Probes.isProbe(col("vec_id")))
+    val probes = emb.filter(graft.Probes.isProbe(spark, col("vec_id")))
       .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
         col("tbl"), col("bucket"))
     val cand = probes

@@ -170,7 +170,7 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
     // the active probe cap joined the memo key in r10 (0 = uncapped);
     // since r13 memos live in the weak per-session store
     val memo = graft.Sessions.memoMap(spark)
-    val key = Similarity.gateKey(sfDir, 4096)
+    val key = Similarity.gateKey(spark, sfDir, 4096)
     memo.remove(key)
     val first = Similarity.q17CosineTopK(spark, sfDir).collect()
     assert(memo.containsKey(key), "gate probe cached")

@@ -59,47 +59,47 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
     assert(builds === 2 && back.count() === 1)
   }
 
-  test("query cache publishes rename-free: marker commit resolves without CURRENT") {
+  test("query cache: a crashed writer's leftovers never serve and GC reclaims them") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-s3ish").toString
+    import java.nio.file.attribute.FileTime
+    val dir = Files.createTempDirectory("graft-crash").toString
     var builds = 0
     def build = { builds += 1; Seq((builds, "v")).toDF("n", "v") }
-    val cfg = "s3ish"
+    val cfg = "crash"
     val entry = java.nio.file.Paths.get(dir, QueryCache.cacheKey(cfg))
+    def served(s: org.apache.spark.sql.SparkSession) =
+      QueryCache.cached(s, dir, cfg)(build).select("n").collect()(0).getInt(0)
+    assert(served(spark) === 1 && builds === 1)
+    val live = new String(Files.readAllBytes(entry.resolve("CURRENT")), "UTF-8").trim
 
-    // simulate an object store: no usable rename target — resolution
-    // must come from the .current-v-* commit markers alone
-    System.setProperty("graft.cache.renameFree", "true")
-    try {
-      val first = QueryCache.cached(spark, dir, cfg)(build)
-      assert(first.count() === 1 && builds === 1)
-      assert(!Files.exists(entry.resolve("CURRENT")),
-        "rename-free mode must not write the pointer")
-      // read-through serves the marker-committed version (no rebuild)
-      assert(QueryCache.cached(spark, dir, cfg)(build).count() === 1)
-      assert(builds === 1)
-      // a second publish wins by newest marker
-      QueryCache.refresh(spark, dir, cfg)(build)
-      assert(builds === 2)
-      val served = QueryCache.cached(spark, dir, cfg)(build)
-      assert(served.select("n").collect()(0).getInt(0) === 2)
-      assert(builds === 2)
-      // a crashed writer (version data without _SUCCESS + its marker)
-      // never becomes live: the previous committed version still serves
-      val ghost = "v-99999999999999-ff"
-      Files.createDirectories(entry.resolve(ghost))
-      Files.write(entry.resolve(s".current-$ghost"), ghost.getBytes("UTF-8"))
-      assert(QueryCache.cached(spark, dir, cfg)(build)
-        .select("n").collect()(0).getInt(0) === 2)
-      assert(builds === 2)
-    } finally System.clearProperty("graft.cache.renameFree")
+    // both crashed writers chose names newer than the live version
+    val t = System.currentTimeMillis() + 60000
+    // died mid-write: data files but no _SUCCESS, no pointer swap
+    val partial = s"v-$t-aa"
+    Seq((98, "partial")).toDF("n", "v").write.parquet(entry.resolve(partial).toString)
+    Files.delete(entry.resolve(partial).resolve("_SUCCESS"))
+    // died after its version completed, before the pointer swap
+    val complete = s"v-${t + 1}-bb"
+    Seq((99, "complete")).toDF("n", "v").write.parquet(entry.resolve(complete).toString)
+    Files.write(entry.resolve(s".CURRENT-$complete"), complete.getBytes("UTF-8"))
+    // a commit marker the retired rename-free mode wrote, naming it
+    Files.write(entry.resolve(s".current-$complete"), complete.getBytes("UTF-8"))
 
-    // back on POSIX semantics: the next publish restores the pointer
-    // fast path and readers agree with the marker resolution
+    // the pointer alone decides: the live version serves, in this
+    // session and in a fresh one, and nothing rebuilds
+    assert(served(spark) === 1 && served(spark.newSession()) === 1 && builds === 1)
+    assert(new String(Files.readAllBytes(entry.resolve("CURRENT")), "UTF-8").trim === live)
+
+    // past the grace period the next publish's GC deletes every leftover
+    val leftovers = Seq(partial, complete, s".CURRENT-$complete", s".current-$complete")
+    val old = FileTime.fromMillis(System.currentTimeMillis() - 16L * 60 * 1000)
+    leftovers.foreach(n => Files.setLastModifiedTime(entry.resolve(n), old))
     QueryCache.refresh(spark, dir, cfg)(build)
-    assert(Files.exists(entry.resolve("CURRENT")))
-    assert(QueryCache.cached(spark, dir, cfg)(build)
-      .select("n").collect()(0).getInt(0) === 3)
+    assert(served(spark) === 2 && builds === 2)
+    leftovers.foreach(n => assert(!Files.exists(entry.resolve(n)), s"$n reclaimed"))
+    // the superseded version is younger than the grace period: kept
+    // for in-flight readers
+    assert(Files.exists(entry.resolve(live).resolve("_SUCCESS")))
   }
 
   test("query cache single-flight: concurrent misses on one key build ONCE") {
@@ -166,8 +166,8 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
     val entry = java.nio.file.Paths.get(dir, QueryCache.cacheKey(cfg))
     // an operator's stray manual copy with an unparseable version name
     Files.createDirectories(entry.resolve("v-backup"))
-    // refresh must still publish and read cleanly (GC treats the
-    // malformed name as ancient, never throws out of the query path)
+    // refresh must still publish and read cleanly (neither resolution
+    // nor GC ever throws out of the query path over a malformed name)
     val out = QueryCache.refresh(spark, dir, cfg)(build)
     assert(out.count() === 1 && builds === 2)
     val again = QueryCache.cached(spark, dir, cfg)(build)
