@@ -31,8 +31,7 @@ import org.apache.spark.sql.functions.{col, expr, map_entries, xxhash64}
   *    output column)) — that forces all output columns to
   *    materialize, closing the pruning blind spot; the hash aggregate
   *    is codegen'd and map-side-combined, so the added cost beyond
-  *    the query itself is one hash per row.
-  *    SPARK_GRAFT_BENCH_FULL_REPS reps (default 1).
+  *    the query itself is one hash per row. One rep.
   *
   * Per-probe normalization: the retrieval family's probe set scales
   * with the corpus BY BENCHMARK CONSTRUCTION (the every-50th-id
@@ -99,7 +98,7 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
-    val fullReps = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL_REPS", "1").toInt
+    val fullReps = 1
     // disk headroom bracketing the run (GiB on the shuffle-temp fs):
     // a disk-constrained record — the failure mode that produced the
     // r8 sf100 ENOSPC — is self-diagnosing instead of a mystery
@@ -165,14 +164,14 @@ object Bench {
     // Build-once / serve-many indexes: time each one-off artifact or
     // model build here — reported per query as build_sec, so the
     // per-rep timings below measure SERVE latency, the number that
-    // matters for an index. Builds are memoized (per JVM for q88's
-    // on-disk artifact, per session for q45's deterministic centroid
-    // train), so the timing loop's reps all hit the prebuilt
-    // structure. q45 joined in r12 (VERDICT item 7): the r11
-    // marginal/fixed fit proved its sf100 wall was ~97 s of in-query
-    // training with per-probe cost below noise — now the train is an
-    // explicit field and ms_per_probe reads serve cost. The top-level
-    // build_sec stays q88's value for record compatibility.
+    // matters for an index. Builds are memoized per session (q88's
+    // on-disk artifact and q45's deterministic centroid train), so the
+    // timing loop's reps all hit the prebuilt structure. q45 joined in
+    // r12 (VERDICT item 7): the r11 marginal/fixed fit proved its sf100
+    // wall was ~97 s of in-query training with per-probe cost below
+    // noise — now the train is an explicit field and ms_per_probe reads
+    // serve cost. The top-level build_sec stays q88's value for record
+    // compatibility.
     // The coarse centroid model is SHARED between q45 and q88 (same
     // Clustering.centroidsQuantized memo key: dir | ivfK(n) | 5), so
     // whichever builder ran first used to absorb the whole train into
@@ -238,9 +237,9 @@ object Bench {
           try { fn(spark, sfDir).count() } catch { case _: Throwable => }
           (System.nanoTime() - t0) / 1e9
         } else -1.0
-      // Either rep count may be 0 (count-only or full-only A/B modes):
-      // an empty vector reports 0.0, never an index crash (an r9 run
-      // hit IndexOutOfBounds with FULL_REPS=0), and min/max mirror that.
+      // SPARK_GRAFT_BENCH_REPS may be 0 (the full-only A/B mode): an
+      // empty vector reports 0.0, never an index crash (an r9 run hit
+      // IndexOutOfBounds with zero reps), and min/max mirror that.
       def timed(n: Int, label: String)(consume: DataFrame => Unit): Seq[(Double, Boolean)] =
         (1 to n).map { _ =>
           val t0 = System.nanoTime()

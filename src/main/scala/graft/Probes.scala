@@ -33,11 +33,15 @@ object Probes {
   val CapKey = "spark.graft.probeCap"
 
   /** `spark`'s active cap (0 = uncapped). Read per call, so a
-    * query picks up the cap its session holds when it is built. */
-  def cap(spark: SparkSession): Long =
-    spark.conf.getOption(CapKey)
-      .orElse(sys.env.get("SPARK_GRAFT_PROBE_CAP"))
-      .map(_.trim.toLong).filter(_ > 0).getOrElse(0L)
+    * query picks up the cap its session holds when it is built. A
+    * blank value reads as unset; a non-numeric one fails loudly. */
+  def cap(spark: SparkSession): Long = {
+    def set(v: Option[String]) = v.map(_.trim).filter(_.nonEmpty)
+    set(spark.conf.getOption(CapKey)).orElse(set(sys.env.get("SPARK_GRAFT_PROBE_CAP")))
+      .map(v => v.toLongOption.getOrElse(throw new IllegalArgumentException(
+        s"$CapKey / SPARK_GRAFT_PROBE_CAP must be an integer, got '$v'")))
+      .filter(_ > 0).getOrElse(0L)
+  }
 
   /** Standard probe membership for `id`: every 50th id, intersected
     * with the prefix `spark`'s cap keeps when one is set. */

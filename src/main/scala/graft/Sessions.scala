@@ -95,8 +95,8 @@ object Sessions {
   /** Per-session memo store, WEAKLY keyed by the session OBJECT.
     * Session lifetime is the library's cache-invalidation granularity
     * (q17/q18 gate probe, q86/q89 merge log, the q45/q88 centroid
-    * model): a fresh session re-probes/re-trains, so on-disk data
-    * changes are picked up then. Until r13 these memos keyed on the
+    * model, q88's index artifact): a fresh session re-probes/re-trains,
+    * so on-disk data changes are picked up then. Until r13 these memos keyed on the
     * session's identity HASH in a global map — entries outlived
     * session.stop() for the life of the JVM (a long-lived JVM cycling
     * sessions over large corpora accumulates dead centroid models),
@@ -113,7 +113,8 @@ object Sessions {
     * thread-safe, so map lookup synchronizes; entry computation runs
     * in the per-session ConcurrentHashMap's computeIfAbsent (two
     * sessions never serialize each other's training). Package-visible
-    * for the memo specs; operators go through sessionMemo. */
+    * for the memo specs and read-only hit checks (q88's artifact);
+    * entries are added only through sessionMemo. */
   private[graft] def memoMap(spark: SparkSession)
       : java.util.concurrent.ConcurrentHashMap[Any, AnyRef] =
     perSessionMemos.synchronized {

@@ -30,13 +30,14 @@ import graft.streaming.{StreamDedup, StreamSessionize}
   *  - Sink is noop: operator + state cost is what's measured, not
   *    parquet encoding.
   *  - State config is part of the record: maxBatchesToRetainInMemory
-  *    defaults to 1 here (the bench measures steady-state size; the
+  *    is 1 here (the bench measures steady-state size; Spark's
   *    default 2 keeps a second in-heap map version purely to
   *    fast-recover a failed batch, doubling the HDFS-backed provider's
   *    reported footprint), and SPARK_GRAFT_STREAM_STATESTORE=rocksdb
   *    switches the dedup-scale path to the RocksDB provider — the
-  *    production backend for state that outgrows the heap. Both knobs
-  *    ride in the JSON so a record names its own configuration.
+  *    production backend for state that outgrows the heap, bounded at
+  *    256 MB. Both ride in the JSON so a record names its own
+  *    configuration. Every run carries all four ops.
   *  - Reported per op: input rows, wall seconds, rows/s, the LAST
   *    progress's state rows + state bytes (the state high-water mark
   *    at end of feed — the number that must stay bounded for a
@@ -68,13 +69,8 @@ object StreamBench {
     // sustained-rate readout from drowning in per-batch overhead
     val nSlicesEvents = sys.env.get("SPARK_GRAFT_STREAM_SLICES_EVENTS")
       .map(_.toInt).getOrElse(math.max(8, nSlices / 4))
-    val retain = sys.env.getOrElse("SPARK_GRAFT_STREAM_RETAIN", "1")
+    val retain = 1L
     val stateStore = sys.env.getOrElse("SPARK_GRAFT_STREAM_STATESTORE", "hdfs")
-    val rocksMb = sys.env.getOrElse("SPARK_GRAFT_STREAM_ROCKSDB_MB", "256")
-    // comma-separated op subset for targeted experiments (never the
-    // committed record — that carries all four)
-    val opsOnly = sys.env.get("SPARK_GRAFT_STREAM_OPS")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // LOAD SENTINEL (the Bench.scala discipline, r11): streaming rates
     // are single-pass walls, so a loaded machine understates them with
     // nothing flagging it. Bracket the run with loadavg + the fixed
@@ -103,7 +99,7 @@ object StreamBench {
         // many-partition memory trap at scale; bounding is how a
         // 1000-executor deployment actually runs RocksDB state.
         .config("spark.sql.streaming.stateStore.rocksdb.boundedMemoryUsage", "true")
-        .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", rocksMb)
+        .config("spark.sql.streaming.stateStore.rocksdb.maxMemoryUsageMB", "256")
       case _ => builder
     }).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
@@ -195,8 +191,7 @@ object StreamBench {
       marksStable: Boolean)
 
     def run(name: String, rows: Long)(build: DataFrame => DataFrame,
-        in: String): Option[Res] = {
-      if (!opsOnly.forall(_(name))) return None
+        in: String): Res = {
       val cp = s"$root/cp-$name"
       val onces = (1 to takes).map { _ =>
         // fresh checkpoint per take: every take replays the identical
@@ -216,8 +211,8 @@ object StreamBench {
           dirBytes(new java.io.File(s"$cp/state")))
       }
       val last = onces.last
-      Some(Res(name, rows, onces.map(_._1), last._2, last._3, last._4,
-        onces.map(_._2).distinct.size == 1))
+      Res(name, rows, onces.map(_._1), last._2, last._3, last._4,
+        onces.map(_._2).distinct.size == 1)
     }
 
     val results = Seq(
@@ -232,7 +227,7 @@ object StreamBench {
               org.apache.spark.sql.Encoders.product[StreamSessionize.Event])
             ).toDF(), evIn),
       run("windowed_counts", evRows)(
-        df => StreamSessionize.windowedCounts(df), evIn)).flatten
+        df => StreamSessionize.windowedCounts(df), evIn))
 
     import Json.{arr, num, obj, str}
     val js = obj(results.map { r =>

@@ -14,12 +14,7 @@ import java.nio.file.{Files, Paths}
   * SPARK_GRAFT_VERIFY_ONLY (comma list) is the builder's inner-loop
   * twin of the bench's ONLY knob: dump just the named queries (paired
   * with check_oracle.py's CHECK_ORACLE_ONLY for a single-query gate
-  * while iterating). The full driver gate never sets it.
-  *
-  * SPARK_GRAFT_VERIFY_RESUME=1 skips any query whose dump already has
-  * a _SUCCESS marker — lets an interrupted multi-hour scale gate pick
-  * up where it stopped instead of recomputing finished dumps. The
-  * full driver gate never sets it (fresh outDir every round). */
+  * while iterating). The full driver gate never sets it. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
@@ -40,10 +35,8 @@ object Verify {
         s"exclusions): ${skip.toSeq.sorted.mkString(",")}")
     Files.writeString(Paths.get(s"$outDir/skipped.json"),
       Json.arr(skip.toSeq.sorted.map(Json.str)))
-    val resume = sys.env.get("SPARK_GRAFT_VERIFY_RESUME").contains("1")
     SparkEntry.queries.foreach { case (name, fn) =>
-      val done = resume && Files.exists(Paths.get(s"$outDir/$name/_SUCCESS"))
-      if (!skip(name) && only.forall(_.contains(name)) && !done) {
+      if (!skip(name) && only.forall(_.contains(name))) {
         // repartition(1), NOT coalesce(1): the checker needs one part
         // file, but coalesce(1) removes the stage boundary and drags
         // the WHOLE upstream computation onto a single thread — for the
@@ -60,8 +53,7 @@ object Verify {
         // next query starts — bounds the multi-hour scale-gate dump's
         // shuffle-temp footprint at one query's worth
         System.gc()
-      } else if (done)
-        System.err.println(s"[verify] $name: resume skip (_SUCCESS present)")
+      }
     }
     val json = Json.obj(SparkEntry.oracleSql.toSeq.map { case (k, v) => k -> Json.str(v) })
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)

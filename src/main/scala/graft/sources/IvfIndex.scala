@@ -3,102 +3,45 @@ package graft.sources
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.graftbridge.Bridge.{column => exprCol, expression}
-import graft.functions.{FloatVecCosine, IntVecSqDist, NearestCellsInt, PqCodesInt, PqDistTableInt}
+import graft.Sessions
+import graft.functions.{IntVecSqDist, NearestCellsInt, PqCodesInt, PqDistTableInt}
 import graft.operators.{Ann, Clustering}
 
-/** Persisted IVF index — the production shape of ANN at 100 TB: train
-  * the coarse quantizer ONCE, write the corpus partitioned by cell,
-  * then serve probe queries against the artifact without touching the
-  * training path again (q45 trains in-query because the test corpus
-  * has no lifecycle; this is the same index with a lifecycle).
+/** Persisted IVF-PQ index — the production shape of ANN at 100 TB:
+  * train the coarse quantizer and the PQ codebooks ONCE, write the
+  * corpus as codes partitioned by cell, then serve probe queries
+  * against the artifact without touching the training path again
+  * (q45/q82 train in-query because the test corpus has no lifecycle;
+  * q88 is the same index with a lifecycle).
   *
-  * Layout: `<path>/centroids` = k×dim integer centroid rows
-  * (broadcast-sized, engine-reproducible — the deterministic q32/q45
-  * quantizer), `<path>/corpus` = (vec_id, embedding) parquet
-  * PARTITIONED BY cell, so a probe that fans out to `probeCells`
-  * cells reads exactly those directories: partition pruning does the
-  * candidate pruning at the FILESYSTEM level, which is the entire
-  * point of IVF on object storage.
+  * Layout:
+  *  - `<path>/centroids` = k×dim integer centroid rows
+  *    (broadcast-sized, engine-reproducible — the deterministic
+  *    q32/q45 quantizer);
+  *  - `<path>/codebooks` = (sub, code, cq) rows — m·pqK subvector
+  *    centroids (operators/Ann.pqCodebooks), broadcast-sized;
+  *  - `<path>/corpus_pq` = (vec_id, codes) PARTITIONED BY cell — m
+  *    small ints per vector, NO raw vectors. A probe that fans out to
+  *    `nProbeCells` cells reads exactly those directories: partition
+  *    pruning does the candidate pruning at the FILESYSTEM level,
+  *    which is the entire point of IVF on object storage, and the
+  *    scan is ~64× narrower than the float corpus (PQ);
+  *  - `<path>/vectors` = (vec_id, q) — the quantized vectors, read
+  *    ONLY by the shortlist rerank fetch.
+  * Everything is exact integer arithmetic end-to-end, so a rebuild on
+  * any engine reproduces the identical artifact.
   */
 object IvfIndex {
-
-  /** Train the quantizer and write both artifacts. */
-  def build(spark: SparkSession, dir: String, path: String,
-      k: Int, iters: Int): Unit = {
-    import spark.implicits._
-    val cents = Clustering.centroidsQuantized(spark, dir, k, iters)
-    cents.zipWithIndex
-      .map { case (cq, cell) => (cell, cq.toSeq) }.toSeq
-      .toDF("cell", "cq")
-      .coalesce(1)
-      .write.mode("overwrite").parquet(s"$path/centroids")
-    Tables.parallelized(Tables.embeddings(spark, dir), col("vec_id"))
-      .select(col("vec_id"), col("embedding"))
-      .withColumn("cell",
-        exprCol(NearestCellsInt(
-          expression(Clustering.quantizedCol), cents, 1))(0))
-      .write.mode("overwrite").partitionBy("cell")
-      .parquet(s"$path/corpus")
-  }
 
   /** The stored quantizer, cell-ordered. */
   def readCentroids(spark: SparkSession, path: String): Array[Array[Long]] =
     spark.read.parquet(s"$path/centroids").orderBy(col("cell")).collect()
       .map(_.getAs[scala.collection.Seq[Long]]("cq").toArray)
 
-  /** Serve top-k for a probe frame (vec_id, embedding) against the
-    * stored index. The probe side assigns its own cells from the tiny
-    * stored quantizer; the corpus scan is joined on the PARTITION
-    * column, so only probed cells' files are read (dynamic partition
-    * pruning; probeCells literal cells prune statically — see
-    * probeCells() below). */
-  def probe(spark: SparkSession, path: String, probes: DataFrame,
-      nProbeCells: Int, topK: Int): DataFrame = {
-    val cents = readCentroids(spark, path)
-    val p = probes
-      .select(col("vec_id").as("probe_id"), col("embedding").as("p_emb"),
-        explode(exprCol(NearestCellsInt(
-          expression(Clustering.quantizedCol), cents,
-          nProbeCells))).as("cell"))
-    val corpus = spark.read.parquet(s"$path/corpus")
-      .select(col("vec_id").as("neighbor_id"), col("embedding"), col("cell"))
-    val scored = p.join(corpus, "cell")
-      .filter(col("probe_id") =!= col("neighbor_id"))
-      .withColumn("cosine",
-        exprCol(FloatVecCosine(expression(col("p_emb")),
-          expression(col("embedding")))))
-    val w = Window.partitionBy(col("probe_id"))
-      .orderBy(col("cosine").desc, col("neighbor_id").asc)
-    scored
-      .withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= topK)
-      .select(col("probe_id"), col("neighbor_id"), col("rank"), col("cosine"))
-  }
-
-  /** Read only the named cells — literal partition pruning (the scan
-    * lists exactly these directories; PartitionFilters asserted in
-    * InfraSpec). */
-  def readCells(spark: SparkSession, path: String, cells: Seq[Int]): DataFrame =
-    spark.read.parquet(s"$path/corpus")
-      .filter(col("cell").isin(cells: _*))
-
-  // ---- IVF-PQ: the compressed index ----------------------------------
-
-  /** Build the IVF-PQ artifact — the full production ANN index shape:
-    * coarse quantizer (k cells) for pruning + per-subspace PQ
-    * codebooks (operators/Ann.pqCodebooks) for in-cell scanning.
-    * Layout adds to build()'s:
-    *  - `<path>/codebooks` = (sub, code, cq) rows — m·pqK subvector
-    *    centroids, broadcast-sized;
-    *  - `<path>/corpus_pq` = (vec_id, codes) PARTITIONED BY cell —
-    *    m small ints per vector, NO raw vectors: the scan a probe
-    *    actually reads is both partition-pruned (IVF) and ~64×
-    *    narrower than the float corpus (PQ);
-    *  - `<path>/vectors` = (vec_id, q) — the quantized vectors, read
-    *    ONLY by the shortlist rerank fetch.
-    * Everything is exact integer arithmetic end-to-end, so a rebuild
-    * on any engine reproduces the identical artifact. */
+  /** Train the coarse quantizer (k cells) and the per-subspace PQ
+    * codebooks, and write all four parts of the artifact. */
   def buildPq(spark: SparkSession, dir: String, path: String,
       k: Int, iters: Int, m: Int, pqK: Int, pqIters: Int): Unit = {
     import spark.implicits._
@@ -134,52 +77,45 @@ object IvfIndex {
       .groupBy(_._1).toSeq.sortBy(_._1)
       .map(_._2.map(_._2)).toArray
 
-  /** Serve top-k against the IVF-PQ artifact: probes assign their own
-    * cells and ADC tables from the two tiny stored models; the
-    * cell-joined scan reads ONLY probed partitions and ONLY the code
-    * columns; a per-probe ADC shortlist then fetches full vectors
-    * from `<path>/vectors` for the exact integer rerank (the q82
-    * two-stage contract, served from disk). */
   /** q88: the persisted IVF-PQ index as a driver-checked query — the
     * full production ANN lifecycle in one verifiable unit: build the
     * artifact (coarse quantizer + codebooks + cell-partitioned codes +
-    * rerank vectors) into a scratch warehouse dir, then serve the
-    * standard probe set (vec_id % 50 == 0) FROM THE ARTIFACT. Training
-    * and serving are exact integer arithmetic end-to-end, so the
-    * DuckDB oracle replays the entire lifecycle — quantizer training,
-    * PQ codebook training, cell assignment, 6-cell probe fan-out, ADC
-    * shortlist (serveShortlist — 15% of the constant candidate pool),
-    * exact rerank top-10. The build is deterministic
-    * and mode=overwrite, so repeated runs are idempotent — and
-    * therefore memoized per JVM (ensureQ88Built): the first invocation
-    * in a process builds, later ones serve the identical artifact.
-    * A fresh JVM always rebuilds before first serve, so a stale tmpdir
-    * artifact from an earlier process is never trusted. This is the
-    * production split: build once, serve many — Bench times the two
-    * phases separately (build_sec vs the per-rep serve medians). */
-  private val q88Built = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  private def q88Path(dir: String): String =
-    new java.io.File(System.getProperty("java.io.tmpdir"),
-      "graft-ivfpq-q88-" + java.lang.Integer.toHexString(dir.hashCode))
-      .getAbsolutePath
-
-  /** Build the q88 artifact for `dir` unless this JVM already did. */
+    * rerank vectors) into a scratch dir, then serve the standard probe
+    * set (vec_id % 50 == 0) FROM THE ARTIFACT. Training and serving
+    * are exact integer arithmetic end-to-end, so the DuckDB oracle
+    * replays the entire lifecycle — quantizer training, PQ codebook
+    * training, cell assignment, 6-cell probe fan-out, ADC shortlist
+    * (serveShortlist — 15% of the constant candidate pool), exact
+    * rerank top-10.
+    *
+    * The artifact is memoized per session (ensureQ88Built): a
+    * session's first invocation builds, later ones serve the identical
+    * artifact, and a fresh session rebuilds — the library's rule for
+    * every trained model. Each build goes to its own uniquely named
+    * `graft-ivfpq-q88-*` dir under java.io.tmpdir, deleted at JVM exit,
+    * so no other session or process can name, overwrite or serve it
+    * and it needs no commit protocol. This is the production split:
+    * build once, serve many — Bench times the two phases separately
+    * (build_sec vs the per-rep serve medians). */
   def ensureQ88Built(spark: SparkSession, dir: String): String = {
-    val path = q88Path(dir)
-    val key = s"$dir|$path"
-    if (!q88Built.contains(key)) q88Built.synchronized {
-      if (!q88Built.contains(key)) {
+    val key = ("q88", dir)
+    // a hit runs no Spark job: the corpus count below is build-only
+    Sessions.memoMap(spark).get(key) match {
+      case path: String => path
+      case _ =>
         // coarse cells scale with the corpus (Ann.ivfK — identical to
         // the committed k=16 up to sf1); PQ codebook size stays fixed
         // (codebooks are per-SUBSPACE models, independent of n)
-        val n = Tables.embeddings(spark, dir).count()
-        buildPq(spark, dir, path, k = Ann.ivfK(n), iters = 5,
-          m = 8, pqK = 16, pqIters = 3)
-        q88Built.add(key)
-      }
+        val k = Ann.ivfK(Tables.embeddings(spark, dir).count())
+        // the shared centroid model is a memo entry of its own: train
+        // it here, since a memo compute must not add entries to the map
+        Clustering.centroidsQuantized(spark, dir, k, iters = 5)
+        Sessions.sessionMemo(spark, key) {
+          val path = Bridge.createTempDir("graft-ivfpq-q88").getAbsolutePath
+          buildPq(spark, dir, path, k = k, iters = 5, m = 8, pqK = 16, pqIters = 3)
+          path
+        }
     }
-    path
   }
 
   /** ADC shortlist for SERVING the IVF-PQ index: 15% of the probe's
@@ -202,6 +138,12 @@ object IvfIndex {
       shortlist = serveShortlist(6), topK = 10)
   }
 
+  /** Serve top-k against the IVF-PQ artifact: probes assign their own
+    * cells and ADC tables from the two tiny stored models; the
+    * cell-joined scan reads ONLY probed partitions and ONLY the code
+    * columns; a per-probe ADC shortlist then fetches full vectors
+    * from `<path>/vectors` for the exact integer rerank (the q82
+    * two-stage contract, served from disk). */
   def probePq(spark: SparkSession, path: String, probes: DataFrame,
       nProbeCells: Int, shortlist: Int, topK: Int): DataFrame = {
     val cents = readCentroids(spark, path)

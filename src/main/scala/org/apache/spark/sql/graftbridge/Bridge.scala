@@ -88,27 +88,22 @@ object Bridge {
   /** Adaptive per-round sweep: delete the given dead shuffles, waiting
     * for the files to hit the floor only when the shuffle-temp
     * filesystem is actually short on headroom (free GiB below
-    * `spark.graft.sweepBlockingMinFreeGb`, default 32 — roughly three
-    * sf100 PageRank rounds). Under pressure the sf100 guarantee holds
-    * exactly as before — the files are gone before this returns; with
-    * ample headroom the deletion is queued asynchronously and the
-    * iteration doesn't pay a per-id synchronization round-trip that A/B
-    * measured at ~+25% on sf0.1 q53 (VERDICT_r9 item 4). */
+    * [[BlockingSweepFreeGb]] — roughly three sf100 PageRank rounds).
+    * Under pressure the sf100 guarantee holds exactly as before — the
+    * files are gone before this returns; with ample headroom the
+    * deletion is queued asynchronously and the iteration doesn't pay a
+    * per-id synchronization round-trip that A/B measured at ~+25% on
+    * sf0.1 q53 (VERDICT_r9 item 4). */
   def sweepShuffles(spark: org.apache.spark.sql.SparkSession,
-      ids: Iterable[Int]): Unit = {
-    val minFree = spark.conf.get("spark.graft.sweepBlockingMinFreeGb", "32")
-      .toLong
-    val blocking = shuffleDirFreeGb(spark) < minFree
-    if (blocking) {
+      ids: Iterable[Int]): Unit =
+    if (shuffleDirFreeGb(spark) < BlockingSweepFreeGb) {
       val t0 = System.nanoTime()
       removeShuffles(spark, ids, blocking = true)
       SweepStats.blockedNanos.addAndGet(System.nanoTime() - t0)
-      SweepStats.blockingSweeps.incrementAndGet()
-    } else {
-      removeShuffles(spark, ids, blocking = false)
-      SweepStats.asyncSweeps.incrementAndGet()
-    }
-  }
+    } else removeShuffles(spark, ids, blocking = false)
+
+  /** Free GiB on the shuffle-temp filesystem below which a sweep blocks. */
+  private val BlockingSweepFreeGb = 32L
 
   /** Process-cumulative sweep accounting, so an iterative operator's
     * wall can be split into "waiting for dead files to hit the floor"
@@ -118,9 +113,13 @@ object Bridge {
     * consumers take deltas; monotone, never reset by operators. */
   object SweepStats {
     val blockedNanos = new java.util.concurrent.atomic.AtomicLong(0L)
-    val blockingSweeps = new java.util.concurrent.atomic.AtomicLong(0L)
-    val asyncSweeps = new java.util.concurrent.atomic.AtomicLong(0L)
   }
+
+  /** A fresh, uniquely named directory `<java.io.tmpdir>/<prefix>-<uuid>`,
+    * registered with Spark's shutdown hook for deletion at JVM exit. */
+  def createTempDir(prefix: String): java.io.File =
+    org.apache.spark.util.Utils.createTempDir(
+      System.getProperty("java.io.tmpdir"), prefix)
 
   /** A frame over rows already on the driver: the LocalRelation that
     * `createDataFrame` builds, minus its external-row conversion, so

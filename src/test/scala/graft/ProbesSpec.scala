@@ -12,8 +12,8 @@ import graft.operators.Ann
   * was taken under. */
 class ProbesSpec extends AnyFunSuite with SparkFixture {
 
-  private def withCap[A](n: Long)(body: => A): A = {
-    spark.conf.set(Probes.CapKey, n)
+  private def withCap[A](v: String)(body: => A): A = {
+    spark.conf.set(Probes.CapKey, v)
     try body finally spark.conf.unset(Probes.CapKey)
   }
 
@@ -35,7 +35,7 @@ class ProbesSpec extends AnyFunSuite with SparkFixture {
     val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
     val all = emb.filter(Probes.isProbe(spark, col("vec_id")))
       .select("vec_id").collect().map(_.getLong(0)).sorted
-    val capped = withCap(3) {
+    val capped = withCap("3") {
       emb.filter(Probes.isProbe(spark, col("vec_id")))
         .select("vec_id").collect().map(_.getLong(0)).sorted
     }
@@ -45,7 +45,7 @@ class ProbesSpec extends AnyFunSuite with SparkFixture {
 
   test("capped q45 results equal the uncapped results restricted to the capped probes") {
     val full = q45Triples(spark)
-    val capped = withCap(2)(q45Triples(spark))
+    val capped = withCap("2")(q45Triples(spark))
     val cappedProbes = capped.map(_._1).toSet
     assert(cappedProbes.size <= 2 && cappedProbes.nonEmpty)
     // same (probe, neighbor, rank) triples: the cap changes WHICH
@@ -79,5 +79,15 @@ class ProbesSpec extends AnyFunSuite with SparkFixture {
       assert(triples === full.filter(t => prefix(t._1)))
     }
     assert(Probes.cap(spark) === 0L, "the sessions' caps leave the parent session uncapped")
+  }
+
+  test("a blank cap reads as unset; a non-numeric cap fails naming the key and value") {
+    // the env fallback is unset in the test JVM, so blank conf is uncapped
+    assume(sys.env.get("SPARK_GRAFT_PROBE_CAP").forall(_.trim.isEmpty))
+    for (v <- Seq("", "  ")) assert(withCap(v)(Probes.cap(spark)) === 0L, s"cap '$v'")
+    val e = intercept[IllegalArgumentException](withCap("x")(Probes.cap(spark)))
+    assert(e.getMessage.contains(Probes.CapKey) &&
+      e.getMessage.contains("SPARK_GRAFT_PROBE_CAP") && e.getMessage.contains("'x'"),
+      e.getMessage)
   }
 }

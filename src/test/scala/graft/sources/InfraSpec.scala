@@ -708,38 +708,6 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
     assert(back.count() === 3)
   }
 
-  test("persisted IVF index: probe equals the in-query q45; cells prune files") {
-    val path = Files.createTempDirectory("graft-ivf").toString
-    IvfIndex.build(spark, sfDir, path, k = 16, iters = 5)
-
-    // cell layout on disk: one directory per cell
-    val cellDirs = new java.io.File(s"$path/corpus").listFiles()
-      .filter(_.getName.startsWith("cell=")).map(_.getName).sorted
-    assert(cellDirs.nonEmpty)
-
-    // serving from the artifact reproduces the in-query index exactly
-    val probes = Tables.embeddings(spark, sfDir)
-      .filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
-    val served = IvfIndex.probe(spark, path, probes, nProbeCells = 6, topK = 5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      .toSet
-    val inQuery = graft.operators.Ann
-      .annIvf(spark, sfDir, k = 16, iters = 5, probeCells = 6, topK = 5)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3)))
-      .toSet
-    assert(served === inQuery)
-
-    // literal cell reads prune at the partition level
-    val pruned = IvfIndex.readCells(spark, path, Seq(0, 1))
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("cell"),
-      s"cell filter must prune partitions, got:\n$plan")
-    val cells = pruned.select("cell").distinct().collect().map(_.getInt(0)).toSet
-    assert(cells.subsetOf(Set(0, 1)))
-  }
-
   test("IVF-PQ index: codes-only partitions; served results match an integer replay") {
     val path = Files.createTempDirectory("graft-ivfpq").toString
     val (k, m, pqK) = (16, 8, 16)
@@ -749,6 +717,17 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
     // the cell partitions store codes, never vectors — the PQ claim
     val corpusPq = spark.read.parquet(s"$path/corpus_pq")
     assert(corpusPq.columns.toSet === Set("vec_id", "codes", "cell"))
+
+    // one directory per cell, and a literal cell filter prunes at the
+    // partition level: the scan lists exactly the named cells
+    val cellDirs = new java.io.File(s"$path/corpus_pq").listFiles()
+      .filter(_.getName.startsWith("cell="))
+    assert(cellDirs.length > 2)
+    val pruned = corpusPq.filter(col("cell").isin(0, 1))
+    val plan = pruned.queryExecution.executedPlan.toString
+    assert("PartitionFilters: \\[[^\\]]*cell".r.findFirstIn(plan).isDefined,
+      s"cell filter must prune partitions, got:\n$plan")
+    assert(pruned.select("cell").distinct().collect().map(_.getInt(0)).toSet === Set(0, 1))
 
     val probes = Tables.embeddings(spark, sfDir)
       .filter(col("vec_id") % 50 === 0).select("vec_id", "embedding")
@@ -797,5 +776,26 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
     }.toSet
     assert(served === expected)
     assert(served.nonEmpty)
+  }
+
+  test("q88's index is per session: two sessions build private dirs and serve alike") {
+    // fresh sessions start with empty memo maps: no trained centroid
+    // model, no q88 artifact
+    val s1 = spark.newSession()
+    val s2 = spark.newSession()
+    Seq(s1, s2).foreach(s => assert(graft.Sessions.memoMap(s).isEmpty))
+    val p1 = IvfIndex.ensureQ88Built(s1, sfDir)
+    val p2 = IvfIndex.ensureQ88Built(s2, sfDir)
+    assert(p1 !== p2, "each session builds its own artifact dir")
+    assert(IvfIndex.ensureQ88Built(s1, sfDir) === p1, "a session reuses its artifact")
+    def rows(s: org.apache.spark.sql.SparkSession): Seq[String] =
+      IvfIndex.q88IvfpqProbe(s, sfDir).collect().map(_.toString).toSeq.sorted
+    val served1 = rows(s1)
+    assert(served1.nonEmpty)
+    assert(rows(s2) === served1)
+    // another session's artifact going away (as a concurrent
+    // overwrite would make it) leaves this session's serve intact
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(p1))
+    assert(rows(s2) === served1, "session 2 serves from its own dir")
   }
 }
