@@ -46,9 +46,8 @@ object Bench {
     * fields: slope = marginal ms/probe (the kernel's true per-probe
     * cost), intercept = the probe-count-independent share (artifact
     * opens, in-query training). None when either point is missing or
-    * degenerate — in particular medianSec == 0.0, the full-only A/B
-    * mode (REPS=0) where r.median is a placeholder, not a wall: a fit
-    * through it would emit a negative-garbage slope (ADVICE r11). */
+    * degenerate — in particular medianSec == 0.0, which is no measured
+    * wall: a fit through it would emit a negative-garbage slope. */
   private[graft] def marginalFit(medianSec: Double, halfCapSec: Double,
       probes: Long, halfCapProbes: Long): Option[(Double, Double)] =
     if (medianSec > 0 && halfCapSec >= 0 && halfCapProbes > 0 &&
@@ -97,7 +96,11 @@ object Bench {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench.json")
-    val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt
+    val reps = {
+      val v = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3")
+      v.trim.toIntOption.filter(_ >= 1).getOrElse(throw new IllegalArgumentException(
+        s"SPARK_GRAFT_BENCH_REPS must be an integer >= 1, got '$v'"))
+    }
     val fullReps = 1
     // disk headroom bracketing the run (GiB on the shuffle-temp fs):
     // a disk-constrained record — the failure mode that produced the
@@ -219,27 +222,19 @@ object Bench {
     // `first_touch` is the cold wall, so the cold-vs-warm split is a
     // field in the record instead of folklore. Multi-rep records
     // (sf<=1, median-of-3) already bury first-touch in the median and
-    // don't pay the extra pass. WARM_SKIP exempts queries whose full
-    // recompute is too expensive to run un-timed (sf100's 20-min
-    // iterative q53) — never silent, recorded as warm_skipped.
+    // don't pay the extra pass.
     val warm = sys.env.get("SPARK_GRAFT_BENCH_WARM").contains("1")
-    val warmSkip = sys.env.get("SPARK_GRAFT_BENCH_WARM_SKIP")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-      .getOrElse(Set.empty[String])
     case class R(name: String, median: Double, min: Double, max: Double,
       fullMedian: Double, ok: Boolean, calibMs: Double, calibExtra: Int,
       firstTouch: Double, halfCapSec: Double, halfCapProbes: Long)
     val loopT0 = System.nanoTime()
     val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
       val firstTouch: Double =
-        if (warm && !warmSkip(name)) {
+        if (warm) {
           val t0 = System.nanoTime()
           try { fn(spark, sfDir).count() } catch { case _: Throwable => }
           (System.nanoTime() - t0) / 1e9
         } else -1.0
-      // SPARK_GRAFT_BENCH_REPS may be 0 (the full-only A/B mode): an
-      // empty vector reports 0.0, never an index crash (an r9 run hit
-      // IndexOutOfBounds with zero reps), and min/max mirror that.
       def timed(n: Int, label: String)(consume: DataFrame => Unit): Seq[(Double, Boolean)] =
         (1 to n).map { _ =>
           val t0 = System.nanoTime()
@@ -253,7 +248,7 @@ object Bench {
       val fullRuns = timed(fullReps, "BENCH FULL FAIL")(consumeAll)
       val sorted = runs.map(_._1).sorted
       val fullSorted = fullRuns.map(_._1).sorted
-      def med(v: Seq[Double]): Double = if (v.isEmpty) 0.0 else v(v.length / 2)
+      def med(v: Seq[Double]): Double = v(v.length / 2)
       // Marginal per-probe cost under a cap (untimed extra run): a cap
       // amortizes any probe-count-INDEPENDENT cost (q45's in-query IVF
       // retrain, artifact opens) over fewer probes, so raw
@@ -266,12 +261,9 @@ object Bench {
       // per-probe cost — and the fixed-cost intercept explicitly.
       // cap > 1: cap/2 == 0 would read back as UNCAPPED (Probes treats
       // 0 as "no cap") and run the full probe set by accident
-      // reps >= 1: in full-only A/B mode (REPS=0) there is no real
-      // full-cap wall for the two-point fit to use, so the extra
-      // half-cap run would only waste untimed wall (ADVICE r11)
       val cap = Probes.cap(spark)
       val (halfCapSec, halfCapProbes): (Double, Long) =
-        if (reps >= 1 && cap > 1 && probeCounts.get(name).exists(_ > 0)) {
+        if (cap > 1 && probeCounts.get(name).exists(_ > 0)) {
           val oldCap = spark.conf.getOption(Probes.CapKey)
           spark.conf.set(Probes.CapKey, cap / 2)
           try {
@@ -324,8 +316,7 @@ object Bench {
       // timer interval, keeping the 1-2 s Full-GC pause out of timed
       // reps and out of the calibration samples above
       System.gc()
-      R(name, med(sorted), sorted.headOption.getOrElse(0.0),
-        sorted.lastOption.getOrElse(0.0), med(fullSorted),
+      R(name, med(sorted), sorted.head, sorted.last, med(fullSorted),
         runs.forall(_._2) && fullRuns.forall(_._2),
         calibSample, calibExtra, firstTouch, halfCapSec, halfCapProbes)
     }
@@ -425,7 +416,6 @@ object Bench {
     // the record says so, next to the counted per-query divisors
     val probeCap = Probes.cap(spark)
     val probeCapField = if (probeCap > 0) Seq("probe_cap" -> probeCap.toString) else Nil
-    val warmSkipped = if (warm) warmSkip.intersect(selected.keySet) else Set.empty[String]
     val full = obj(metricFields ++ Seq("queries" -> qs) ++ runFields ++
       Seq("full_reps" -> fullReps.toString) ++ probeCapField ++ Seq(
         "disk_free_gb_before" -> diskFreeBefore.toString,
@@ -435,7 +425,9 @@ object Bench {
         "calib_ms_after" -> num(calibAfter), "calib_ms_worst" -> num(calibWorst),
         "stall_windows" -> stallWindows.toString, "loop_wall_sec" -> num(loopWallSec),
         "warm_pass" -> warm.toString,
-        "warm_skipped" -> arr(warmSkipped.toSeq.sorted.map(str))))
+        // no query is exempt from the warm pass; the key stays for
+        // record readers
+        "warm_skipped" -> arr(Nil)))
     java.nio.file.Files.write(java.nio.file.Paths.get(outFile),
       (full + "\n").getBytes("UTF-8"))
     spark.stop()

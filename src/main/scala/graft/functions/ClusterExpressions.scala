@@ -1,6 +1,7 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -206,18 +207,16 @@ object ClusterKernels {
     * deltas...], ending with the byte array. Sorted input makes every
     * delta a positive integer, and adjacency gaps are tiny compared to
     * the id-space width — measured 1.68 B/entry on the sf1 co-purchase
-    * graph versus the 4 B (int) / 8 B (long) array element. The
-    * encoding does not depend on the id width: int and long elements
-    * (`longElems`) pack to the same bytes for the same values, so one
-    * kernel serves every id range, including ids past 2^32. */
-  def packSorted(a: ArrayData, longElems: Boolean): Array[Byte] = {
+    * graph versus the 8 B (long) array element. Elements are longs, so
+    * one kernel serves every id range, including ids past 2^32. */
+  def packSorted(a: ArrayData): Array[Byte] = {
     val n = a.numElements()
     val buf = new Array[Byte](10 * n) // worst case: 10 bytes per 64-bit varint
     var pos = 0
     var prev = 0L
     var i = 0
     while (i < n) {
-      val x = if (longElems) a.getLong(i) else a.getInt(i).toLong
+      val x = a.getLong(i)
       // zigzag the first value (ids may be negative); deltas of a
       // sorted array are >= 0 and encode as plain varints
       var v = if (i == 0) (x << 1) ^ (x >> 63) else x - prev
@@ -396,20 +395,20 @@ case class NearestSubCentroidInt(left: Expression, right: Expression,
   override def prettyName: String = "nearest_sub_centroid_int"
 }
 
-/** Delta-varint pack a sorted id array (array<int> or array<bigint>)
-  * into a binary column — q87's adjacency encoding; see
-  * ClusterKernels.packSorted. */
+/** Delta-varint pack a sorted array<bigint> of ids into a binary
+  * column — q87's adjacency encoding; see ClusterKernels.packSorted. */
 case class PackSorted(child: Expression) extends UnaryExpression {
-  private def longElems: Boolean = child.dataType match {
-    case ArrayType(LongType, _) => true
-    case _ => false
+  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
+    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
+    case t => TypeCheckResult.TypeCheckFailure(
+      s"pack_sorted expects array<bigint>, got ${t.catalogString}")
   }
   override def dataType: DataType = BinaryType
   override def nullSafeEval(input: Any): Any =
-    ClusterKernels.packSorted(input.asInstanceOf[ArrayData], longElems)
+    ClusterKernels.packSorted(input.asInstanceOf[ArrayData])
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, c =>
-      s"${ev.value} = graft.functions.ClusterKernels.packSorted($c, $longElems);")
+      s"${ev.value} = graft.functions.ClusterKernels.packSorted($c);")
   override protected def withNewChildInternal(newChild: Expression): PackSorted =
     copy(child = newChild)
   override def prettyName: String = "pack_sorted"

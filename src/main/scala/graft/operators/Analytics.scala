@@ -135,11 +135,6 @@ object Analytics {
       .filter(col("purchases") === 0 && col("value_sum") >= 50.0)
   }
 
-  /** Equal-width binning + histogram — ag_grid_color_scale's
-    * linear/signed binning (biutils.py:143-218) as a width_bucket-style
-    * expression: fixed bounds so the binning is a pure per-row codegen
-    * expression (no global min/max pass needed at 100 TB when bounds
-    * are configured, which is how the reference does it too). */
   /** Signed binning (biutils.py:143-218 "signed" mode): symmetric
     * width buckets around zero, clamped to [-maxBin-1, maxBin]. */
   def signedBin(c: Column, width: Double, maxBin: Int): Column =
@@ -150,6 +145,11 @@ object Analytics {
   def percentBin(c: Column, nBins: Int): Column =
     least(floor(c * nBins), lit(nBins.toLong - 1))
 
+  /** Equal-width binning + histogram — ag_grid_color_scale's
+    * linear/signed binning (biutils.py:143-218) as a width_bucket-style
+    * expression: fixed bounds so the binning is a pure per-row codegen
+    * expression (no global min/max pass needed at 100 TB when bounds
+    * are configured, which is how the reference does it too). */
   def q15BinHistogram(spark: SparkSession, dir: String): DataFrame = {
     val width = 50000.0
     val bin = least(floor(col("o_totalprice") / width), lit(9.0)).cast("long")

@@ -321,67 +321,35 @@ object Ann {
         col("adc_dist"), col("dist"))
   }
 
-  /** Embedding-cosine near-duplicate pairs above a threshold.
-    * Candidates come from random-hyperplane LSH bucket collisions
-    * (HyperplaneBuckets — the q25 machinery), verified by exact
-    * cosine, so precision is 1.0 by construction and neither the
-    * corpus×corpus cartesian nor a per-label quadratic block join
-    * ever forms: pair generation is bounded by bucket sizes, and
-    * recall is an explicit (bitsPerTable, nTables) knob — the
-    * standard contract of embedding dedup at scale (candidate
-    * recall traded for pruning, cf. SNIPPETS.md MinHashLSH).
+  /** q30: embedding-cosine near-duplicate pairs at cosine >= 0.3,
+    * exact over all pairs (dedupEmbeddingDense).
     *
-    * Parameter regime — MEASURED in round 7, not assumed (recorded in
-    * OPTIMIZATION_r13.md's q30 entry; the one-off audit main that took
-    * these numbers is in git history, commit f128992):
-    * the test embeddings hold NO high-cosine planted pairs (max
-    * pairwise cosine ~0.51; the 0.3 threshold sits just above the
-    * random-pair background of |cos|~0.12 for 64-d). Near the
-    * background there is no gap for ANY collision scheme — measured at
-    * b=4/L=32 across sf0.001/0.01/0.1: distinct candidates are a
-    * CONSTANT ~0.855 of all pairs and the collision stream is ~2.07×
-    * all pairs (sf0.1: 4.14M stream / 1.71M distinct of 2.0M pairs,
-    * candidate recall 0.99, 278 candidate rows per output pair) — LSH
-    * prunes nothing here and pays ~2× brute force in shuffled join
-    * rows, and the OUTPUT itself is Θ(n²) (0.75–4.6% of all pairs
-    * qualify; sf1 emits 1.5M pairs, ~90% cross-copy background), so
-    * EVERY correct engine is output-bound quadratic at this threshold.
-    * Hence the regime gate below: thresholds inside the no-gap band
-    * (< denseGapThreshold) run the blocked-dense exact path
-    * (dedupEmbeddingDense — zero join-row stream, recall 1.0, compute
-    * = the unavoidable n²d/2 flops at primitive-kernel speed);
-    * production near-dup thresholds (>= 0.9, where real structure
-    * exists) keep LSH with b=8, L=16: recall 0.996 with real pruning
-    * (random-pair collision 0.5^8/table ⇒ ~6% of pairs ever collide,
-    * and bucket joins prune the rest). */
+    * The threshold sits just above the 64-d random-pair background
+    * (|cos| ~0.12; the test embeddings hold no planted high-cosine
+    * pairs, max ~0.51), so 0.75–4.6% of ALL pairs qualify and the
+    * output itself is Θ(n²): every correct engine is output-bound
+    * quadratic here. Measured in round 7 (OPTIMIZATION_r13.md's q30
+    * entry): hyperplane-LSH candidates at this threshold are a
+    * constant ~0.855 of all pairs, so collision pruning removes
+    * nothing and costs ~2× brute force in shuffled join rows. q90
+    * (SemDeDup) is the library's subquadratic embedding dedup. */
   def q30DedupEmbedding(spark: SparkSession, dir: String): DataFrame =
-    dedupEmbeddingAdaptive(spark, dir, threshold = 0.3)
+    dedupEmbeddingDense(spark, dir, threshold = 0.3)
 
-  /** Thresholds below this have no collision gap against the 64-d
-    * random-cosine background (see the measured regime note above):
-    * collision pruning retains >80% of all pairs, so the dense exact
-    * kernel is strictly better. At/above it, LSH buckets prune. */
-  val denseGapThreshold = 0.6
-
-  def dedupEmbeddingAdaptive(spark: SparkSession, dir: String,
-      threshold: Double): DataFrame =
-    if (threshold < denseGapThreshold) dedupEmbeddingDense(spark, dir, threshold)
-    else dedupEmbedding(spark, dir, threshold, nTables = 16, bitsPerTable = 8)
-
-  /** Exact all-pairs near-dup via blocked dense cosine — the no-gap
-    * regime path. Vectors are grouped into G = ceil(n/1024) disjoint
-    * id-keyed blocks; the G·(G+1)/2 block pairs form a tiny driver-free
-    * pair relation (spark.range — no cartesian, no BNLJ) that
-    * equi-joins the block table twice; each pair row then runs the
-    * BlockPairCosines kernel: O(|A|·|B|·d) primitive flops, pairs
-    * emitted only above threshold. Exactly the work a thresholded
-    * GEMM does — nothing is shuffled per PAIR, only per block pair
-    * (total shuffle = n·d·4·G/2 bytes = n²·d·2/B), and recall is 1.0
-    * by construction vs LSH's 0.99. Scale: at quadratic-output
-    * thresholds nothing subquadratic exists (the answer itself is
-    * Θ(n²)); raise blockSize to trade shuffle for task granularity —
-    * 8192 at n=2M keeps the block-pair shuffle ~130 GB on a cluster
-    * while 2000 cells × 4 MB pair rows spread over every executor. */
+  /** Exact all-pairs near-dup via blocked dense cosine. Vectors are
+    * grouped into G = ceil(n/1024) disjoint id-keyed blocks; the
+    * G·(G+1)/2 block pairs form a tiny driver-free pair relation
+    * (spark.range — no cartesian, no BNLJ) that equi-joins the block
+    * table twice; each pair row then runs the BlockPairCosines
+    * kernel: O(|A|·|B|·d) primitive flops, pairs emitted only above
+    * threshold. Exactly the work a thresholded GEMM does — nothing is
+    * shuffled per PAIR, only per block pair (total shuffle =
+    * n·d·4·G/2 bytes = n²·d·2/B), and recall is 1.0 by construction.
+    * Scale: at quadratic-output thresholds nothing subquadratic exists
+    * (the answer itself is Θ(n²)); raise blockSize to trade shuffle
+    * for task granularity — 8192 at n=2M keeps the block-pair shuffle
+    * ~130 GB on a cluster while 2000 cells × 4 MB pair rows spread
+    * over every executor. */
   def dedupEmbeddingDense(spark: SparkSession, dir: String,
       threshold: Double, blockSize: Int = 1024): DataFrame = {
     val vecs = Tables.parallelized(Tables.embeddings(spark, dir), col("vec_id"))
@@ -405,42 +373,6 @@ object Ann {
         col("p.cosine").as("cosine"))
   }
 
-  def dedupEmbedding(spark: SparkSession, dir: String, threshold: Double,
-      nTables: Int, bitsPerTable: Int): DataFrame = {
-    val vecs = Tables.parallelized(Tables.embeddings(spark, dir), col("vec_id"))
-      .select(col("vec_id"), col("embedding"))
-    // band rows carry only (vec_id, tbl, bucket): the 64-float vectors
-    // stay out of the exploded bucket table and its self-join, exactly
-    // like q21's band table — candidates are bare id pairs until the
-    // (much smaller, post-dedup) verify join fetches vectors back.
-    val banded = vecs
-      .select(col("vec_id"),
-        posexplode(exprCol(HyperplaneBuckets(
-          expression(col("embedding")), nTables, bitsPerTable))).as(Seq("tbl", "bucket")))
-      // join-key shuffle -> ReusedExchange: the signature pass runs once
-      .repartition(col("tbl"), col("bucket"))
-    val cand = banded.as("a")
-      .join(banded.as("b"),
-        col("a.tbl") === col("b.tbl") && col("a.bucket") === col("b.bucket") &&
-          col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("vec_a"), col("b.vec_id").as("vec_b"))
-    // Verify BEFORE dedup: a pair colliding in t tables is scored t
-    // times, but the cosine is a shuffle-free codegen'd 64-mult loop
-    // over broadcast-fetched vectors, while deduping the full
-    // collision stream is a candidate-sized SHUFFLE. Filtering first
-    // shrinks the dedup input to the (tiny) above-threshold set —
-    // measured 2.7s -> 1.9s at sf0.1. Same result set: duplicate
-    // collisions of a pair score the identical bit-exact cosine, and
-    // dropDuplicates runs on (pair, cosine) rows post-filter.
-    cand
-      .join(vecs.select(col("vec_id").as("vec_a"), col("embedding").as("emb_a")), "vec_a")
-      .join(vecs.select(col("vec_id").as("vec_b"), col("embedding").as("emb_b")), "vec_b")
-      .select(col("vec_a"), col("vec_b"),
-        cosine(col("emb_a"), col("emb_b")).as("cosine"))
-      .filter(col("cosine") >= threshold)
-      .dropDuplicates("vec_a", "vec_b")
-  }
-
   /** q90: SEMANTIC dedup in the SemDeDup shape (Abbas et al. 2023,
     * arXiv:2303.09540): cluster the embedding space with k-means, then
     * prune within clusters only — a vector is pruned when a
@@ -450,9 +382,9 @@ object Ann {
     * Output = the per-cluster dedup report: size, pruned, kept, prune
     * rate in bp.
     *
-    * This is the third dedup geometry next to q30 (LSH buckets) and
-    * q21 (MinHash bands): LSH prunes by data-OBLIVIOUS hyperplanes,
-    * SemDeDup by the corpus's own density structure — on real
+    * This is the third dedup geometry next to q30 (exact all pairs)
+    * and q21 (MinHash bands): MinHash prunes by data-OBLIVIOUS
+    * hashes, SemDeDup by the corpus's own density structure — on real
     * embedding corpora the cluster restriction is what makes
     * quadratic-free semantic dedup possible at scale: the total cell
     * count grows with N (semDedupK below — k = max(16, n/250)) so the

@@ -165,18 +165,6 @@ object Multimodal {
     }
   }
 
-  /** Frame sampling stub: pick every k-th "frame" (byte block) of a
-    * video payload; returns (doc_id, frame_idx, frame binary). The
-    * blocking/partitioning is the real logic; frame decode is the stub. */
-  def sampleFrames(media: Dataset[MediaRow], frameBytes: Int, everyK: Int): DataFrame = {
-    import media.sparkSession.implicits._
-    media.flatMap { r =>
-      r.content.grouped(frameBytes).zipWithIndex.collect {
-        case (frame, idx) if idx % everyK == 0 => (r.doc_id, idx, frame)
-      }
-    }.toDF("doc_id", "frame_idx", "frame")
-  }
-
   /** REAL video frame extraction, pure JVM: walk an AVI (RIFF)
     * container and return the compressed video frame payloads
     * (`##dc`/`##db` chunks inside the `movi` LIST, including frames

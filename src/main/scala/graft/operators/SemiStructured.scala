@@ -13,9 +13,7 @@ import Exprs._
 object SemiStructured {
 
   /** Extract a JSON property and aggregate by it — get_json_object is
-    * a codegen'd path expression; for repeated multi-key extraction
-    * from_json with an explicit schema is the one-parse variant
-    * (jsonProps below). */
+    * a codegen'd path expression. */
   def q33JsonExtract(spark: SparkSession, dir: String): DataFrame = {
     Tables.events(spark, dir)
       .withColumn("k", get_json_object(col("props"), "$.k").cast("long"))
@@ -27,13 +25,6 @@ object SemiStructured {
         min(col("k")).as("min_k"),
         max(col("k")).as("max_k"))
   }
-
-  /** One-parse struct extraction for multi-key JSON payloads. */
-  def jsonProps(df: DataFrame): DataFrame =
-    df.withColumn("props_struct",
-      from_json(col("props"), org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("k",
-          org.apache.spark.sql.types.LongType)))))
 
   /** Timezone conversion — biutils.py:243-248: report local-market
     * days from UTC event times. from_utc_timestamp is a literal-zone

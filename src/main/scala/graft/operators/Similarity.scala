@@ -109,31 +109,6 @@ object Similarity {
       .select(col("probe_doc"), col("neighbor_doc"), col("rank"), col("cosine"))
   }
 
-  /** Dense fast path for corpora whose term dictionary is broadcast-
-    * sized (this corpus: 31 terms): discover the vocabulary (one
-    * metadata-scale pass, exactly like groupBy().pivot() value
-    * discovery), densify each doc's count vector over it, and score
-    * probe×doc pairs with the FloatVecCosine codegen kernel — no
-    * postings shuffle at all. The postings join (cosineTopK) remains
-    * the general path when the dictionary doesn't fit; same contract,
-    * bit-identical scores (integer-valued counts are exact in double).
-    */
-  def cosineTopKDense(spark: SparkSession, dir: String, k: Int,
-      maxVocab: Int = 65536): DataFrame = {
-    // Vocab-size gate: this path collects the dictionary to the driver
-    // and densifies every row over it — only valid for broadcast-sized
-    // dictionaries. limit(maxVocab+1) bounds what the driver can ever
-    // hold, so an over-limit corpus fails loudly here instead of
-    // OOMing; use cosineTopK (the postings join) for general corpora.
-    // (Not persisted: vocab discovery and scoring each scan once —
-    // two scans beat an immortal cache entry.)
-    val vocab = discoverVocab(spark, dir, maxVocab)
-    require(vocab.length <= maxVocab,
-      s"dense cosine path requires a dictionary <= $maxVocab terms " +
-        s"(got more); use cosineTopK, the postings-join general path")
-    cosineTopKDenseWith(spark, dir, k, vocab)
-  }
-
   /** Bounded dictionary discovery: at most maxVocab+1 words ever reach
     * the driver, whatever the corpus size. */
   private def discoverVocab(spark: SparkSession, dir: String,
@@ -215,12 +190,19 @@ object Similarity {
         val vocab = probe.vocab
         val denseWork = probeCount * corpusCount * vocab.length
         if (probeCount * vocab.length <= maxProbeFloats && denseWork <= maxDenseWork)
-          cosineTopKDenseWith(spark, dir, k, vocab)
+          denseCosineTopK(spark, dir, k, vocab)
         else cosineTopK(spark, dir, k)
     }
   }
 
-  private def cosineTopKDenseWith(spark: SparkSession, dir: String, k: Int,
+  /** Dense fast path for corpora whose term dictionary is broadcast-
+    * sized (this corpus: 31 terms): densify each doc's count vector
+    * over the gate's discovered `vocab` and score probe×doc pairs with
+    * a codegen kernel — no postings shuffle at all. The postings join
+    * (cosineTopK) remains the general path when the dictionary doesn't
+    * fit; same contract, bit-identical scores (integer-valued counts
+    * are exact in double). */
+  private def denseCosineTopK(spark: SparkSession, dir: String, k: Int,
       vocab: Array[String]): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge.{column => exprCol, expression}
     val post = postings(spark, dir)

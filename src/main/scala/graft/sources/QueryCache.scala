@@ -321,11 +321,6 @@ object QueryCache {
     try v.getFileName.toString.split("-")(1).toLong
     catch { case _: RuntimeException => 0L } // epoch: ancient, not overflow-prone
 
-  /** Cross-JVM single-flight: take the `.lease` file (atomic create,
-    * stale leases stolen by mtime), build+publish, release. A loser
-    * polls for a fresh CURRENT from the lease holder and only falls
-    * back to building after the wait budget — the cross-process
-    * equivalent of the reference's get_lock-protected refresh. */
   /** One attempt to take the entry's `.lease` file: atomic create, or
     * steal-by-mtime when the holder looks dead. Best-effort: an IO
     * failure other than "already exists" reads as acquired (the lease
@@ -348,6 +343,11 @@ object QueryCache {
     }
   }
 
+  /** Cross-JVM single-flight: take the `.lease` file (atomic create,
+    * stale leases stolen by mtime), build+publish, release. A loser
+    * polls for a fresh CURRENT from the lease holder and only falls
+    * back to building after the wait budget — the cross-process
+    * equivalent of the reference's get_lock-protected refresh. */
   private def publishSingleFlight(spark: SparkSession, entry: Path,
       ttlMillis: Long, build: => DataFrame): DataFrame = {
     Files.createDirectories(entry)

@@ -440,15 +440,19 @@ class PropertySpec extends AnyFunSuite with graft.SparkFixture {
   }
 
   test("packed intersect equals the plain intersect, incl. negative/bounds ids") {
-    // q87's adjacency encoding: delta-varint pack must be lossless and
-    // width-free — one pack kernel fed int or long elements, and the
-    // packed-stream merge must equal Scala's set intersection on every
-    // input, including negative first values (zigzag) and full-range
-    // Int and Long bounds
-    def packInts(xs: Array[Int]) =
-      ClusterKernels.packSorted(new GenericArrayData(xs), longElems = false)
+    // q87's adjacency encoding: delta-varint pack must be lossless, and
+    // the packed-stream merge must equal Scala's set intersection on
+    // every input, including negative first values (zigzag) and
+    // full-range Int and Long bounds
     def packLongs(xs: Array[Long]) =
-      ClusterKernels.packSorted(new GenericArrayData(xs), longElems = true)
+      ClusterKernels.packSorted(new GenericArrayData(xs))
+    // the kernel reads longs, so the expression admits only array<bigint>
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    import org.apache.spark.sql.types.{ArrayType, IntegerType, LongType}
+    def packOf(xs: Seq[Any], t: ArrayType) =
+      graft.functions.PackSorted(Literal.create(xs, t)).checkInputDataTypes()
+    assert(packOf(Seq(1L, 2L), ArrayType(LongType)).isSuccess)
+    assert(packOf(Seq(1, 2), ArrayType(IntegerType)).isFailure)
     def check(sa: Array[Long], sb: Array[Long], pa: Array[Byte], pb: Array[Byte]): Unit = {
       val got = ClusterKernels.packedIntersect(pa, pb).toLongArray()
       val expected = (sa.toSet & sb.toSet).toArray.sorted
@@ -467,9 +471,7 @@ class PropertySpec extends AnyFunSuite with graft.SparkFixture {
       (Array(Int.MinValue, -7, 0, Int.MaxValue), Array(Int.MinValue, -7, Int.MaxValue)))
     intCases.foreach { case (sa, sb) =>
       val la = sa.map(_.toLong); val lb = sb.map(_.toLong)
-      // int and long elements of the same values pack to the same bytes
-      assert(packInts(sa).sameElements(packLongs(la)))
-      check(la, lb, packInts(sa), packInts(sb))
+      check(la, lb, packLongs(la), packLongs(lb))
     }
     val longGen = for {
       a <- Gen.listOf(Gen.choose(Long.MinValue, Long.MaxValue))

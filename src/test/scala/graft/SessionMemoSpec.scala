@@ -83,7 +83,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     def serve(): Unit = {
       val s = spark.newSession()
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-memo-cache").toString
+      val dir = org.apache.spark.sql.graftbridge.Bridge.createTempDir("graft-memo-cache").toString
       val cfg = "memo-collectable"
       sources.QueryCache.cached(s, dir, cfg)(Seq(1, 2).toDF("x"))
       // collect, not count: count() plans an aggregate, and a session
@@ -122,7 +122,7 @@ class SessionMemoSpec extends AnyFunSuite with SparkFixture {
     def serve(): Unit = {
       val s = spark.newSession()
       import s.implicits._
-      val dir = java.nio.file.Files.createTempDirectory("graft-memo-hot").toString
+      val dir = org.apache.spark.sql.graftbridge.Bridge.createTempDir("graft-memo-hot").toString
       val cfg = "memo-hot-collectable"
       sources.QueryCache.cached(s, dir, cfg)(Seq((1, "a"), (2, "b")).toDF("x", "y"))
       // collect() only, for the reason given in the spec above

@@ -149,9 +149,8 @@ class AnnSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("q30 dense near-dup: precision 1.0 AND recall 1.0 vs exact ground truth") {
-    // threshold 0.3 < denseGapThreshold => the adaptive gate takes the
-    // blocked-dense exact path, whose recall is 1.0 by construction —
-    // the spec pins exactness, not a floor
+    // q30 runs the blocked-dense exact path, whose recall is 1.0 by
+    // construction — the spec pins exactness, not a floor
     val recall = nearDupRecall(sfDir, Ann.q30DedupEmbedding(spark, sfDir).collect())
     assert(recall == 1.0, s"dense path must be exact, got recall $recall")
   }
@@ -160,17 +159,6 @@ class AnnSpec extends AnyFunSuite with SparkFixture {
     val dir = "/root/testdata/sf0.1"
     val recall = nearDupRecall(dir, Ann.q30DedupEmbedding(spark, dir).collect())
     assert(recall == 1.0, s"dense path must be exact, got recall $recall")
-  }
-
-  test("LSH near-dup variant (production-threshold machinery): precision 1.0, recall >= 0.95 at threshold 0.3") {
-    // the collision machinery the adaptive gate uses ABOVE
-    // denseGapThreshold, exercised at 0.3 where ground truth is rich:
-    // recall-oriented b=4/L=32 measured 0.988-0.991 on the fixtures
-    val recall = nearDupRecall(sfDir,
-      Ann.dedupEmbedding(spark, sfDir, threshold = 0.3,
-        nTables = 32, bitsPerTable = 4).collect())
-    info(s"LSH near-dup recall = $recall")
-    assert(recall >= 0.95, s"recall $recall below floor")
   }
 
   /** Exact top-k by quantized int distance — the ranking PQ's ADC

@@ -143,7 +143,7 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
         .map(r => (r.getAs[Long]("node"), r.getAs[Long]("outdeg"),
           r.getAs[Long]("rank"))).sorted
     val viaLocal = run()
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    val dir = org.apache.spark.sql.graftbridge.Bridge.createTempDir("graft-ckpt").toPath
     spark.conf.set("spark.graft.checkpointDir", dir.toString)
     val viaDurable = try run()
       finally spark.conf.unset("spark.graft.checkpointDir")
@@ -211,7 +211,7 @@ class GraphSpec extends AnyFunSuite with SparkFixture {
     // order, so orientation and ties are unchanged) — on the broadcast
     // branch and on the shuffle branch
     val offset = 1L << 40
-    val root = java.nio.file.Files.createTempDirectory("graft-q87-wide")
+    val root = org.apache.spark.sql.graftbridge.Bridge.createTempDir("graft-q87-wide").toPath
     try {
       spark.read.parquet(s"$sfDir/lineitem.parquet")
         .withColumn("l_partkey", col("l_partkey").cast("long") + lit(offset))

@@ -135,19 +135,6 @@ class MultimodalSpec extends AnyFunSuite with SparkFixture {
     assert(sampled.toSeq === Seq(0, 2))
   }
 
-  test("frame sampling blocks the payload and keeps every k-th frame") {
-    import spark.implicits._
-    val payload = Array.tabulate[Byte](10)(_.toByte)
-    val ds = Seq(Multimodal.MediaRow(1L, "video", payload)).toDS()
-    val frames = Multimodal.sampleFrames(ds, frameBytes = 4, everyK = 2)
-      .collect().map(r => (r.getAs[Int]("frame_idx"), r.getAs[Array[Byte]]("frame")))
-      .sortBy(_._1)
-    // blocks: [0..3],[4..7],[8..9]; keep idx 0 and 2
-    assert(frames.map(_._1).sameElements(Array(0, 2)))
-    assert(frames(0)._2.sameElements(Array[Byte](0, 1, 2, 3)))
-    assert(frames(1)._2.sameElements(Array[Byte](8, 9)))
-  }
-
   test("resize emits fixed-size grids via nearest-neighbor index math") {
     import spark.implicits._
     // 16 bytes -> inferred 4x4 grid; resize to 2x2 picks (0,0),(0,2),(2,0),(2,2)

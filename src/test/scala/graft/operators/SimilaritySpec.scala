@@ -39,12 +39,16 @@ class SimilaritySpec extends AnyFunSuite with SparkFixture {
   }
 
   test("dense fast path and postings join produce identical rankings and scores") {
-    val dense = Similarity.cosineTopKDense(spark, sfDir, 5).collect()
+    // the adaptive gate takes the dense kernel on this fixture's
+    // broadcast-sized dictionary
+    val adaptive = Similarity.cosineTopKAdaptive(spark, sfDir, 5)
+    val dense = adaptive.collect()
       .map(r => (r.getAs[Long]("probe_doc"), r.getAs[Long]("neighbor_doc"),
         r.getAs[Int]("rank"), r.getAs[Double]("cosine"))).toSet
     val postings = Similarity.cosineTopK(spark, sfDir, 5).collect()
       .map(r => (r.getAs[Long]("probe_doc"), r.getAs[Long]("neighbor_doc"),
         r.getAs[Int]("rank"), r.getAs[Double]("cosine"))).toSet
+    assert(adaptive.queryExecution.executedPlan.toString.contains("floatmat_cosines"))
     assert(dense === postings) // bit-identical scores, same tie-breaks
   }
 

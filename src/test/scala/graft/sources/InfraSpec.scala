@@ -5,12 +5,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache computes once, then serves reads; refresh recomputes") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cache").toString
+    val dir = Bridge.createTempDir("graft-cache").toString
     var builds = 0
     def build = { builds += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
     val cfg = """{"dims":["id"],"metrics":["count"]}"""
@@ -28,7 +29,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache TTL: hit within ttl, recompute after expiry") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-ttl").toString
+    val dir = Bridge.createTempDir("graft-ttl").toString
     var builds = 0
     def build = { builds += 1; Seq(1, 2, 3).toDF("x") }
     val cfg = """{"q":"ttl"}"""
@@ -45,7 +46,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache treats a damaged current version as a miss, not an error") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-dmg").toString
+    val dir = Bridge.createTempDir("graft-dmg").toString
     var builds = 0
     def build = { builds += 1; Seq(1).toDF("x") }
     val cfg = "dmg"
@@ -62,7 +63,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   test("query cache: a crashed writer's leftovers never serve and GC reclaims them") {
     import spark.implicits._
     import java.nio.file.attribute.FileTime
-    val dir = Files.createTempDirectory("graft-crash").toString
+    val dir = Bridge.createTempDir("graft-crash").toString
     var builds = 0
     def build = { builds += 1; Seq((builds, "v")).toDF("n", "v") }
     val cfg = "crash"
@@ -105,7 +106,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   test("query cache single-flight: concurrent misses on one key build ONCE") {
     import spark.implicits._
     import java.util.concurrent.{CountDownLatch, Executors, TimeUnit}
-    val dir = Files.createTempDirectory("graft-sflight").toString
+    val dir = Bridge.createTempDir("graft-sflight").toString
     val builds = new java.util.concurrent.atomic.AtomicInteger(0)
     def build = {
       builds.incrementAndGet()
@@ -137,7 +138,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache merge refresh upserts by key and keeps versioned publish") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-merge").toString
+    val dir = Bridge.createTempDir("graft-merge").toString
     val cfg = """{"q":"merge"}"""
     QueryCache.cached(spark, dir, cfg)(
       Seq((1L, "a", 10), (2L, "b", 20)).toDF("id", "v", "x"))
@@ -158,7 +159,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache survives a non-conforming v-* entry (manual copy)") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-badver").toString
+    val dir = Bridge.createTempDir("graft-badver").toString
     val cfg = """{"q":"bad-version"}"""
     var builds = 0
     def build = { builds += 1; Seq(1).toDF("x") }
@@ -176,7 +177,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache steals a stale lease from a dead builder") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-lease").toString
+    val dir = Bridge.createTempDir("graft-lease").toString
     val cfg = """{"q":"stale-lease"}"""
     val entry = java.nio.file.Paths.get(dir, QueryCache.cacheKey(cfg))
     Files.createDirectories(entry)
@@ -217,7 +218,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache: a warm hit starts no Spark job; a version's schema is read once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-warm").toString
+    val dir = Bridge.createTempDir("graft-warm").toString
     val cfg = """{"q":"warm-hit"}"""
     var builds = 0
     def build = { builds += 1; Seq((1, "a"), (2, "b")).toDF("id", "v") }
@@ -243,7 +244,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache schema memo is per version: new columns show on the next hit") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-pervers").toString
+    val dir = Bridge.createTempDir("graft-pervers").toString
     val cfg = """{"q":"per-version"}"""
     def hit = QueryCache.cached(spark, dir, cfg)(sys.error("must not rebuild"))
     QueryCache.cached(spark, dir, cfg)(Seq((1, "a")).toDF("id", "v"))
@@ -282,7 +283,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache hot tier: a warm hit starts no job; count() scans no file and plans no Exchange") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-hot").toString
+    val dir = Bridge.createTempDir("graft-hot").toString
     val cfg = """{"q":"hot-tier"}"""
     QueryCache.cached(spark, dir, cfg)(Seq((1, "a"), (2, "b"), (3, "c")).toDF("id", "v"))
     val (hit, hitJobs) = jobsStartedBy(
@@ -309,7 +310,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   test("query cache hot tier serves exactly the parquet rows of every column type") {
     import spark.implicits._
     import java.sql.{Date, Timestamp}
-    val dir = Files.createTempDirectory("graft-hot-types").toString
+    val dir = Bridge.createTempDir("graft-hot-types").toString
     val cfg = """{"q":"hot-types"}"""
     val df = Seq(
       (1, Some(BigDecimal("12345.67")), Some(Date.valueOf("2024-02-29")),
@@ -339,7 +340,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
 
   test("query cache serves a version over the hot-tier budget from parquet, same rows") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("graft-cold").toString
+    val dir = Bridge.createTempDir("graft-cold").toString
     val cfg = """{"q":"over-budget"}"""
     val saved = QueryCache.HotTier.versionBudget
     QueryCache.HotTier.versionBudget = 0L
@@ -556,7 +557,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("partitioned parquet sink prunes partitions on a date predicate") {
-    val dir = Files.createTempDirectory("graft-part").toString
+    val dir = Bridge.createTempDir("graft-part").toString
     val events = Tables.events(spark, sfDir)
     Tables.writePartitionedByDay(events, "ts", s"$dir/events_by_day")
     val back = spark.read.parquet(s"$dir/events_by_day")
@@ -569,7 +570,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("compact rewrites a fragmented table into size-targeted files") {
-    val dir = Files.createTempDirectory("graft-compact").toString
+    val dir = Bridge.createTempDir("graft-compact").toString
     val orders = Tables.orders(spark, sfDir)
     orders.repartition(64).write.parquet(s"$dir/frag")
     def parquetFiles(p: String) =
@@ -587,7 +588,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("orc sink/source round-trips with predicate pushdown and pruning") {
-    val dir = Files.createTempDirectory("graft-orc").toString
+    val dir = Bridge.createTempDir("graft-orc").toString
     val orders = Tables.orders(spark, sfDir)
     Tables.writeOrc(orders, s"$dir/orders_orc")
     val back = Tables.readOrc(spark, s"$dir/orders_orc")
@@ -645,7 +646,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
     // 2) layout property: z-ordered files cover small rectangles in
     // BOTH dimensions; a plain single-column sort leaves the second
     // dimension spanning the full range in every file
-    val dir = Files.createTempDirectory("graft-zorder").toString
+    val dir = Bridge.createTempDir("graft-zorder").toString
     val orders = Tables.orders(spark, sfDir)
       .select((col("o_custkey") % 1024).as("x"), (col("o_orderkey") % 1024).as("y"))
     Tables.writeZOrdered(orders, s"$dir/z", "x", "y", bits = 10, files = 8)
@@ -688,7 +689,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("csv ingest round-trips with explicit schema and normalization") {
-    val dir = Files.createTempDirectory("graft-csv").toString
+    val dir = Bridge.createTempDir("graft-csv").toString
     Files.writeString(java.nio.file.Paths.get(s"$dir/in.csv"),
       "name,qty,region\n  Widget  A ,5, EAST \nGadget,7,west\n,3,\n")
     val schema = StructType(Seq(
@@ -709,7 +710,7 @@ class InfraSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("IVF-PQ index: codes-only partitions; served results match an integer replay") {
-    val path = Files.createTempDirectory("graft-ivfpq").toString
+    val path = Bridge.createTempDir("graft-ivfpq").toString
     val (k, m, pqK) = (16, 8, 16)
     IvfIndex.buildPq(spark, sfDir, path, k = k, iters = 5, m = m,
       pqK = pqK, pqIters = 3)

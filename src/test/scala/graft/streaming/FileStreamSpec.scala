@@ -7,6 +7,7 @@ import org.apache.spark.sql.types._
 import graft.SparkFixture
 import StreamSessionize._
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** File-source → stateful sessionize → parquet-sink pipeline with a
   * checkpoint: the stream is run twice (AvailableNow) over a growing
@@ -32,7 +33,7 @@ class FileStreamSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("sessionizer closes sessions across a checkpointed restart") {
-    val root = Files.createTempDirectory("graft-stream").toString
+    val root = Bridge.createTempDir("graft-stream").toString
     val in = s"$root/in"; val out = s"$root/out"; val cp = s"$root/cp"
     Files.createDirectories(java.nio.file.Paths.get(in))
 

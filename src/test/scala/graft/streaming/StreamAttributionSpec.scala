@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Watermarked stream-stream interval join: purchases match the same
   * user's clicks in the preceding hour, state survives a checkpointed
@@ -29,7 +30,7 @@ class StreamAttributionSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("interval join matches in-window clicks and survives a restart") {
-    val root = Files.createTempDirectory("graft-attr").toString
+    val root = Bridge.createTempDir("graft-attr").toString
     val (cin, pin, out, cp) = (s"$root/c", s"$root/p", s"$root/out", s"$root/cp")
     Files.createDirectories(java.nio.file.Paths.get(cin))
     Files.createDirectories(java.nio.file.Paths.get(pin))

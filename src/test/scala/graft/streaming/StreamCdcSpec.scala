@@ -6,6 +6,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.sql.functions._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming CDC upsert across a checkpointed restart: the snapshot
   * state survives, a late out-of-order change (lower seq) cannot
@@ -36,7 +37,7 @@ class StreamCdcSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("cdc upsert: state survives restart; late low-seq changes lose; tombstones hold") {
-    val root = Files.createTempDirectory("graft-scdc").toString
+    val root = Bridge.createTempDir("graft-scdc").toString
     val in = s"$root/in"; val out = s"$root/out"; val cp = s"$root/cp"
     Files.createDirectories(java.nio.file.Paths.get(in))
 

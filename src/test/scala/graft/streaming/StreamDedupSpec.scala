@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming dedup over a file source with a checkpoint: duplicate
   * content arriving in a LATER micro-batch is dropped using keyed
@@ -28,7 +29,7 @@ class StreamDedupSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("stream dedup drops duplicate content across checkpointed batches") {
-    val root = Files.createTempDirectory("graft-sdedup").toString
+    val root = Bridge.createTempDir("graft-sdedup").toString
     val in = s"$root/in"; val out = s"$root/out"; val cp = s"$root/cp"
     Files.createDirectories(java.nio.file.Paths.get(in))
 

@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming drift monitor: per-(window, term) cells emit once at
   * window close; the batch readout scores them against a reference
@@ -16,7 +17,7 @@ class StreamDriftSpec extends AnyFunSuite with SparkFixture {
     StructField("text", StringType), StructField("ts", TimestampType)))
 
   test("closed-window term cells match batch; drift report flags the shifted term") {
-    val root = Files.createTempDirectory("graft-drift").toString
+    val root = Bridge.createTempDir("graft-drift").toString
     val in = s"$root/in"; val out = s"$root/out"; val cp = s"$root/cp"
     Files.createDirectories(java.nio.file.Paths.get(in))
 

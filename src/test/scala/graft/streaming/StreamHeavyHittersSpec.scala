@@ -6,6 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** The Misra-Gries aggregator (q48) under Structured Streaming:
   * mergeable summaries are precisely what streaming aggregation state
@@ -17,7 +18,7 @@ class StreamHeavyHittersSpec extends AnyFunSuite with SparkFixture {
     StructField("event_type", StringType), StructField("user_id", LongType)))
 
   test("streaming MG heavy hitters keep their bounds across micro-batches") {
-    val root = Files.createTempDirectory("graft-shh").toString
+    val root = Bridge.createTempDir("graft-shh").toString
     val in = s"$root/in"
     Files.createDirectories(java.nio.file.Paths.get(in))
     // batch 1: user 1 heavy; batch 2: user 2 heavier — state must merge

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.SparkFixture
-import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streamed ingest preprocessing must equal the batch computation row
   * for row — same expressions, two execution modes. */
@@ -17,7 +17,7 @@ class StreamIngestSpec extends AnyFunSuite with SparkFixture {
     StructField("n_chars", LongType)))
 
   test("streamed quality-filter + chunking equals the batch pipeline") {
-    val dir = Files.createTempDirectory("graft-singest").toString
+    val dir = Bridge.createTempDir("graft-singest").toString
     // stage real corpus rows as the incoming stream
     val docs = spark.read.parquet(s"$sfDir/documents.parquet")
       .select("doc_id", "text", "n_chars")

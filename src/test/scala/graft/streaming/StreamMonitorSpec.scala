@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming threshold monitor: alerts fire exactly once per closed
   * window, only for users who crossed the value threshold without a
@@ -16,7 +17,7 @@ class StreamMonitorSpec extends AnyFunSuite with SparkFixture {
     StructField("value", DoubleType), StructField("ts", TimestampType)))
 
   test("alerts emit for no-purchase threshold crossers when the window closes") {
-    val root = Files.createTempDirectory("graft-monitor").toString
+    val root = Bridge.createTempDir("graft-monitor").toString
     val in = s"$root/in"; val out = s"$root/out"; val cp = s"$root/cp"
     Files.createDirectories(java.nio.file.Paths.get(in))
 

@@ -5,6 +5,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.SparkFixture
 import java.nio.file.Files
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Streaming minhash near-dup over a file source with a checkpoint:
   * band claims made in an earlier run flag near-duplicate content
@@ -28,7 +29,7 @@ class StreamNearDedupSpec extends AnyFunSuite with SparkFixture {
   }
 
   test("stream near-dup flags band collisions across checkpointed runs") {
-    val root = Files.createTempDirectory("graft-sneardup").toString
+    val root = Bridge.createTempDir("graft-sneardup").toString
     val in = s"$root/in"; val out = s"$root/out"; val cp = s"$root/cp"
     Files.createDirectories(java.nio.file.Paths.get(in))
 
@@ -102,7 +103,7 @@ class StreamNearDedupSpec extends AnyFunSuite with SparkFixture {
           (col("fresh_bands") < 32).as("is_near_dup"))
     }
 
-    val root = Files.createTempDirectory("graft-sneardup-eq").toString
+    val root = Bridge.createTempDir("graft-sneardup-eq").toString
     val in = s"$root/in"
     // feed file 1: the sf0.01 corpus, one doc per 100 ms; file 2: a
     // far-future sentinel that pushes the watermark so every data
